@@ -64,10 +64,6 @@ def max_ts_and_count(df: DataFrame, ts_field: str) -> tuple[int | None, int]:
     return mx, 0 if row is None else int(row["n"])
 
 
-# Backwards-compatible name for epoch-ms (long) columns.
-max_ts_ms = max_ts
-
-
 def next_checkpoint(
     new_max: int | None,
     previous: int,

@@ -16,10 +16,10 @@ which canonicalizes NULL and absent identically (the reference's lodash
 ``isEqual`` on ragged JSON objects behaves the same way for omitted keys;
 SURVEY.md §7.5.2).
 
-Scale notes (100 TB): the join shuffles both sides on the id unless the state
-table is bucketed by id (then only incoming shuffles) or small enough to
-broadcast. The hash is computed map-side before the shuffle, so only
-(id, hash) plus carried columns move. AQE handles skewed ids.
+Scale notes (100 TB): the join shuffles both sides on the id unless the
+state table is small enough to broadcast. The hash is computed map-side
+before the shuffle, so only (id, hash) plus carried columns move. AQE
+handles skewed ids.
 """
 
 from __future__ import annotations

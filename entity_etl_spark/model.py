@@ -36,12 +36,9 @@ class EngineConfig:
     - ``state_ttl_hours``: keyed-state TTL (config.json:21, default 8)
     - ``initial_checkpoint_ms``: first-run high-water mark (cache.js:18,
       default 1)
-    - ``state_buckets``: when set, state persists as a warehouse table
-      bucketed by the id column and the state merge runs as a join-based
-      MERGE — the recurring delta join (O5) and merge (O12) then read
-      pre-partitioned buckets instead of shuffling the state side every run
-      (state.py:save_state_bucketed / merge_state_join). None = plain
-      parquet state + union-window merge.
+    - ``state_dir``: where each table's state (one parquet directory,
+      state.py) and checkpoint live; reloaded by every run, as the
+      reference reloads its cache file on each cron start (cache.js:20-48)
     - ``profile``: execution profile name (``entity_etl_spark.profile``):
       ``"parity"`` (default) leaves every LSH-family hot-group cap off so
       oracle comparisons see complete output; ``"production"`` flips every
@@ -54,6 +51,5 @@ class EngineConfig:
     state_ttl_hours: float = 8.0
     initial_checkpoint_ms: int = 1
     state_dir: str = "data/state"
-    state_buckets: int | None = None
     profile: str = "parity"
     extra: dict = field(default_factory=dict)

@@ -107,6 +107,63 @@ def run_incremental(
         )
 
 
+def _purge_expired(
+    state: DataFrame | None,
+    spec: TableSpec,
+    config: EngineConfig,
+    now_epoch_ms: int | None,
+) -> None:
+    """Empty input: expired state entries still purge and nothing is sent
+    (reference cache.js:60-67,101-104), so the TTL clock ticks on every run
+    and a quiet source cannot keep suppression state past its ttl."""
+    if state is None:
+        return
+    now = state_mod.now_ms() if now_epoch_ms is None else now_epoch_ms
+    state_mod.save_state(
+        state.filter(F.col(state_mod.TTL_COL) >= F.lit(now)),
+        config.state_dir,
+        spec.name,
+    )
+
+
+def _bodies(
+    latest: DataFrame,
+    state: DataFrame | None,
+    spec: TableSpec,
+    projection,
+    config: EngineConfig,
+) -> DataFrame:
+    """The rows to send, as sink bodies: changed rows vs state (O5) →
+    projection (O6-O9) → batches of at most ``max_batch_size`` (O9/O10)."""
+    delta = changed_rows(latest, state, spec.id_field, ignore=(spec.ts_field,))
+    jsons = _project_to_json(delta, projection)
+    batched = batch_mod.assign_batches_distributed(jsons, config.max_batch_size)
+    return batch_mod.assemble_bodies(batched)
+
+
+def _save_next_state(
+    state: DataFrame | None,
+    latest: DataFrame,
+    spec: TableSpec,
+    config: EngineConfig,
+    now_epoch_ms: int | None,
+) -> None:
+    """Merge and persist the next state (O12/O13). Runs AFTER the sink
+    (at-least-once, app.js:55-58). Merging every seen key in ``latest``,
+    not only the changed ones, reproduces TTL refresh-on-read for unchanged
+    keys (cache.js:79)."""
+    next_state = state_mod.merge_state(
+        state,
+        latest,
+        spec.id_field,
+        ignore=(spec.ts_field,),
+        ts_field=spec.ts_field,
+        ttl_hours=config.state_ttl_hours,
+        now_epoch_ms=now_epoch_ms,
+    )
+    state_mod.save_state(next_state, config.state_dir, spec.name)
+
+
 def _run_incremental_impl(
     spark: SparkSession,
     spec: TableSpec,
@@ -118,36 +175,15 @@ def _run_incremental_impl(
     partial_results: bool = False,
     now_epoch_ms: int | None = None,
 ) -> RunResult:
-    bucketed = bool(config.state_buckets)
-    if bucketed:
-        state = state_mod.load_state_bucketed(spark, config.state_dir, spec.name)
-    else:
-        state = state_mod.load_state(spark, config.state_dir, spec.name)
-
-    def persist_state(df: DataFrame) -> None:
-        if bucketed:
-            state_mod.save_state_bucketed(
-                df,
-                config.state_dir,
-                spec.name,
-                spec.id_field,
-                n_buckets=config.state_buckets,
-            )
-        else:
-            state_mod.save_state(df, config.state_dir, spec.name)
-
+    state = state_mod.load_state(spark, config.state_dir, spec.name)
     checkpoint = ckpt_mod.load_checkpoint(
         config.state_dir, spec.name, config.initial_checkpoint_ms
     )
 
     if spec.ts_field not in source.columns or spec.id_field not in source.columns:
         # empty/schemaless fetch (a dynamic-schema source returns no rows, so
-        # no columns): reference behavior for an empty page — expired state
-        # entries still purge, checkpoint is kept (cache.js:60-67,101-104)
-        if state is not None:
-            now = state_mod.now_ms() if now_epoch_ms is None else now_epoch_ms
-            live = state.filter(F.col(state_mod.TTL_COL) >= F.lit(now))
-            persist_state(live)
+        # no columns): the checkpoint is kept
+        _purge_expired(state, spec, config, now_epoch_ms)
         return RunResult(
             table=spec.name,
             input_rows=0,
@@ -159,11 +195,7 @@ def _run_incremental_impl(
     incoming = ckpt_mod.incremental_scan(source, spec.ts_field, checkpoint)
     incoming = incoming.cache()  # reused by delta, state merge, and max-ts
     latest = keep_latest_per_key(incoming, spec.id_field, spec.ts_field)
-    delta = changed_rows(latest, state, spec.id_field, ignore=(spec.ts_field,))
-
-    jsons = _project_to_json(delta, projection)
-    batched = batch_mod.assign_batches_distributed(jsons, config.max_batch_size)
-    bodies = batch_mod.assemble_bodies(batched).cache()
+    bodies = _bodies(latest, state, spec, projection, config).cache()
 
     # metrics derive from the cached bodies in ONE aggregate — emitted rows
     # = sum of per-batch item counts (delta is one row per emitted item), so
@@ -175,31 +207,8 @@ def _run_incremental_impl(
     n_batches, emitted = int(stats["n_batches"]), int(stats["emitted"])
     sink(bodies)
 
-    # state + checkpoint persist AFTER the sink (at-least-once, app.js:55-58).
-    # merge over `latest` (all seen keys), not `delta`, reproduces
-    # TTL refresh-on-read for unchanged keys (cache.js:79).
-    if bucketed:
-        # `latest` is one-row-per-key here, so the join-based MERGE is exact;
-        # with the state table bucketed by id only the delta shuffles
-        next_state = state_mod.merge_state_join(
-            state,
-            latest,
-            spec.id_field,
-            ignore=(spec.ts_field,),
-            ttl_hours=config.state_ttl_hours,
-            now_epoch_ms=now_epoch_ms,
-        )
-    else:
-        next_state = state_mod.merge_state(
-            state,
-            latest,
-            spec.id_field,
-            ignore=(spec.ts_field,),
-            ts_field=spec.ts_field,
-            ttl_hours=config.state_ttl_hours,
-            now_epoch_ms=now_epoch_ms,
-        )
-    persist_state(next_state)
+    # state + checkpoint persist AFTER the sink (at-least-once, app.js:55-58)
+    _save_next_state(state, latest, spec, config, now_epoch_ms)
     # one fused job gives both the checkpoint high-water mark and the
     # input-row metric from the cached incoming scan
     mx, n_input = ckpt_mod.max_ts_and_count(incoming, spec.ts_field)
@@ -301,34 +310,16 @@ def run_streaming(
         rows = planned_batch_rows(checkpoint_dir, batch_id)
         if rows == 0 or (rows is None and batch_df.isEmpty()):
             state = state_mod.load_state(spark, config.state_dir, spec.name)
-            if state is not None:
-                now = state_mod.now_ms() if now_b is None else now_b
-                state_mod.save_state(
-                    state.filter(F.col(state_mod.TTL_COL) >= F.lit(now)),
-                    config.state_dir,
-                    spec.name,
-                )
+            _purge_expired(state, spec, config, now_b)
             return
         latest = keep_latest_per_key(batch_df, spec.id_field, spec.ts_field)
         state = state_mod.load_state(spark, config.state_dir, spec.name)
-        delta = changed_rows(latest, state, spec.id_field, ignore=(spec.ts_field,))
-        jsons = _project_to_json(delta, projection)
-        batched = batch_mod.assign_batches_distributed(jsons, config.max_batch_size)
-        bodies = batch_mod.assemble_bodies(batched)
+        bodies = _bodies(latest, state, spec, projection, config)
         if sink_takes_batch_id:
             sink(bodies, batch_id)
         else:
             sink(bodies)
-        next_state = state_mod.merge_state(
-            state,
-            latest,
-            spec.id_field,
-            ignore=(spec.ts_field,),
-            ts_field=spec.ts_field,
-            ttl_hours=config.state_ttl_hours,
-            now_epoch_ms=now_b,
-        )
-        state_mod.save_state(next_state, config.state_dir, spec.name)
+        _save_next_state(state, latest, spec, config, now_b)
 
     run_available_now(stream, checkpoint_dir, process, timeout_sec=timeout_sec)
 

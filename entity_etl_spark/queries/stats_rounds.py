@@ -2194,14 +2194,13 @@ def q_warc_response_extract(spark: SparkSession, sf: str) -> DataFrame:
 @register(
     "state_lifecycle_metrics",
     """
-    -- lifecycle accounting over a two-merge bucketed state fixture
+    -- lifecycle accounting over a two-merge parquet state fixture
     -- (merge 1 at Jan-10 over users seen by then, merge 2 at Jan-12
     -- over the (Jan-10, Jan-12] window, TTL 120 h, observed Jan-16):
     -- rows refreshed by merge 2 are live (ttl Jan-17), rows last seen
     -- at merge 1 are EXPIRED TOMBSTONES still on disk (ttl Jan-15 —
-    -- purged only at the NEXT merge), and the generation swap has
-    -- reclaimed exactly one superseded generation. Physical facts
-    -- (files, bytes) are environment-dependent and gated as booleans.
+    -- purged only at the NEXT merge). Physical facts (files, bytes)
+    -- are environment-dependent and gated as booleans.
     WITH m1 AS (SELECT DISTINCT user_id FROM events
                 WHERE ts <= TIMESTAMP '2024-01-10 00:00:00'),
     m2 AS (SELECT DISTINCT user_id FROM events
@@ -2214,33 +2213,27 @@ def q_warc_response_extract(spark: SparkSession, sf: str) -> DataFrame:
                  WHERE user_id NOT IN (SELECT user_id FROM m2))
                 AS BIGINT) AS n_expired_tombstones,
            true AS files_ok,
-           true AS bytes_ok,
-           CAST(1 AS INT) AS generation,
-           CAST(2 AS INT) AS n_merges,
-           CAST(1 AS INT) AS generations_reclaimed
+           true AS bytes_ok
     """,
     doc="O12/O13 state-table lifecycle at scale (VERDICT r9 item 7; "
     "state.state_lifecycle_metrics): the observability the reference's "
     "removeExpiredEntries log line provided (cache.js:60-67), as a "
-    "queryable accounting row riding the merge job — physical rows vs "
-    "TTL-live rows vs expired-but-not-yet-purged tombstones (the "
-    "vacuum planner's input), file/byte footprint (the compaction "
-    "trigger), and generation-swap provenance (pointer position, "
-    "cumulative merges, generations reclaimed) from the bucketed "
-    "backend's meta. Key counts are one distributed aggregate; the "
-    "file walk is driver-side metadata only.",
+    "queryable accounting row over the parquet state table — physical "
+    "rows vs TTL-live rows vs expired-but-not-yet-purged tombstones "
+    "(the vacuum planner's input) and file/byte footprint (the "
+    "compaction trigger). Key counts are one distributed aggregate; "
+    "the file walk is driver-side metadata only.",
     tags=("core",),
 )
 def q_state_lifecycle_metrics(spark: SparkSession, sf: str) -> DataFrame:
     import atexit
     import shutil
     import tempfile
-    import uuid as _uuid
 
     from ..state import (
-        load_state_bucketed,
-        merge_state_join,
-        save_state_bucketed,
+        load_state,
+        merge_state,
+        save_state,
         state_lifecycle_metrics,
     )
 
@@ -2249,7 +2242,7 @@ def q_state_lifecycle_metrics(spark: SparkSession, sf: str) -> DataFrame:
     T2 = 1705363200000  # 2024-01-16 (observation point)
     state_dir = tempfile.mkdtemp(prefix="state_lc_")
     atexit.register(shutil.rmtree, state_dir, True)
-    table = f"state_lc_{_uuid.uuid4().hex[:10]}"
+    table = "state_lc"
     ev = read_sf_table(spark, sf, "events")
 
     def latest(df: DataFrame) -> DataFrame:
@@ -2263,33 +2256,24 @@ def q_state_lifecycle_metrics(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     m1_in = latest(ev.filter(F.col("ts") <= F.lit("2024-01-10 00:00:00").cast("timestamp")))
-    s1 = merge_state_join(
-        None, m1_in, "user_id", ttl_hours=120, now_epoch_ms=T0
-    )
-    save_state_bucketed(s1, state_dir, table, "user_id", n_buckets=8)
-    prev = load_state_bucketed(spark, state_dir, table)
+    s1 = merge_state(None, m1_in, "user_id", ttl_hours=120, now_epoch_ms=T0)
+    save_state(s1, state_dir, table)
+    prev = load_state(spark, state_dir, table)
     m2_in = latest(
         ev.filter(
             (F.col("ts") > F.lit("2024-01-10 00:00:00").cast("timestamp"))
             & (F.col("ts") <= F.lit("2024-01-12 00:00:00").cast("timestamp"))
         )
     )
-    s2 = merge_state_join(
-        prev, m2_in, "user_id", ttl_hours=120, now_epoch_ms=T1
-    )
-    save_state_bucketed(s2, state_dir, table, "user_id", n_buckets=8)
-    m = state_lifecycle_metrics(
-        spark, state_dir, table, now_epoch_ms=T2, bucketed=True
-    )
+    s2 = merge_state(prev, m2_in, "user_id", ttl_hours=120, now_epoch_ms=T1)
+    save_state(s2, state_dir, table)
+    m = state_lifecycle_metrics(spark, state_dir, table, now_epoch_ms=T2)
     return m.select(
         "n_keys",
         "n_live",
         "n_expired_tombstones",
         (F.col("n_files") >= 1).alias("files_ok"),
         (F.col("total_bytes") > 0).alias("bytes_ok"),
-        "generation",
-        "n_merges",
-        "generations_reclaimed",
     )
 
 

@@ -18,10 +18,18 @@ Batch representation: a plain DataFrame/parquet table
 ``(id, __content_hash, __ttl_ms)``. Streaming representation: see
 streaming.py (state store with native TTL).
 
+Layout: one parquet directory per table, ``<state_dir>/<table>.state.parquet``
+(:func:`state_path`), written whole by :func:`save_state` through a temp-dir
+swap and read back by :func:`load_state` in the next run's process — the
+reference reloads its cache file on every cron start the same way
+(cache.js:20-48). Batch and streaming runs share this one layout and the one
+transition, :func:`merge_state`.
+
 Scale notes: the merge is union + keep-latest window partitioned by id — one
-shuffle on id, the same key the delta join uses, so a cluster deployment
-bucketing state by id makes both exchanges disappear. Expired rows are
-filtered before the shuffle.
+shuffle on id, the same key the delta join uses. Expired rows are filtered
+before the shuffle. The save rewrites the whole table, so a run costs
+O(state) even when the delta is small (perfbench ``steady_tick`` measures
+exactly this case).
 """
 
 from __future__ import annotations
@@ -32,7 +40,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .delta import HASH_COL, with_content_hash
 
@@ -41,17 +48,6 @@ TTL_COL = "__ttl_ms"
 
 def now_ms() -> int:
     return int(time.time() * 1000)
-
-
-def empty_state(spark: SparkSession, id_type: T.DataType, id_field: str) -> DataFrame:
-    schema = T.StructType(
-        [
-            T.StructField(id_field, id_type),
-            T.StructField(HASH_COL, T.StringType()),
-            T.StructField(TTL_COL, T.LongType()),
-        ]
-    )
-    return spark.createDataFrame([], schema)
 
 
 def state_path(state_dir: str, table: str) -> str:
@@ -109,100 +105,16 @@ def append_state(new_rows: DataFrame, state_dir: str, table: str) -> None:
     new_rows.write.mode("append").parquet(path)
 
 
-def _bucketed_meta_path(state_dir: str, table: str) -> str:
-    return os.path.join(state_dir, f"{table}.state.bucketed.json")
-
-
-def load_state_bucketed(
-    spark: SparkSession, state_dir: str, table: str
-) -> DataFrame | None:
-    """Load state from its bucketed warehouse table (None on first run).
-
-    The catalog carries the bucket spec, so every downstream join/merge on
-    the id column reads pre-partitioned buckets — the 'bucket state by id and
-    both recurring exchanges disappear' design note in sinks.write_bucketed."""
-    import json as _json
-
-    meta_path = _bucketed_meta_path(state_dir, table)
-    if not os.path.exists(meta_path):
-        return None
-    with open(meta_path, encoding="utf-8") as fh:
-        meta = _json.load(fh)
-    if not spark.catalog.tableExists(meta["table"]):
-        return None
-    return spark.table(meta["table"])
-
-
-def save_state_bucketed(
-    state: DataFrame,
-    state_dir: str,
-    table: str,
-    id_field: str,
-    n_buckets: int = 32,
-) -> None:
-    """Persist state bucketed+sorted by id, atomically via generation swap.
-
-    The next state is derived from the current generation's table, so the
-    write goes to the *other* generation first (materializing the plan while
-    its input still exists), then the pointer file flips and the old
-    generation drops — a crash at any point leaves a readable state, same
-    contract as save_state's tmp-dir swap (app.js:55-58 at-least-once)."""
-    import json as _json
-
-    from .sinks import write_bucketed
-
-    spark = state.sparkSession
-    meta_path = _bucketed_meta_path(state_dir, table)
-    old_name, gen, merges = None, 0, 0
-    if os.path.exists(meta_path):
-        with open(meta_path, encoding="utf-8") as fh:
-            meta = _json.load(fh)
-        old_name, gen = meta["table"], (meta["generation"] + 1) % 2
-        merges = meta.get("merges", 1)  # pre-counter metas: >=1 save
-    new_name = f"{table}_state_g{gen}"
-    spark.sql(f"DROP TABLE IF EXISTS {new_name}")  # stale leftover of a crash
-    # an ORPHANED location (directory present, no catalog entry — e.g. a
-    # previous session's in-memory catalog died without cleanup) blocks
-    # saveAsTable with LOCATION_ALREADY_EXISTS; nothing references it, so
-    # clear it rather than failing the run. Goes through the session's
-    # Hadoop FileSystem so it works for hdfs://, s3a://, etc. — not just
-    # a local-filesystem warehouse dir
-    wh = spark.conf.get("spark.sql.warehouse.dir") or ""
-    if wh:
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        orphan = jvm.org.apache.hadoop.fs.Path(wh, new_name.lower())
-        fs = orphan.getFileSystem(hconf)
-        if fs.exists(orphan):
-            fs.delete(orphan, True)
-    write_bucketed(state, new_name, [id_field], n_buckets=n_buckets)
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        # merges: cumulative save count — every save after the first
-        # drops one superseded generation, so lifecycle accounting can
-        # report generations_reclaimed = merges - 1 without scanning
-        _json.dump(
-            {"table": new_name, "generation": gen, "merges": merges + 1},
-            fh,
-        )
-    os.replace(tmp, meta_path)
-    if old_name and old_name != new_name:
-        spark.sql(f"DROP TABLE IF EXISTS {old_name}")
-
-
 def state_lifecycle_metrics(
     spark: SparkSession,
     state_dir: str,
     table: str,
     *,
     now_epoch_ms: int,
-    bucketed: bool = False,
 ) -> DataFrame:
     """One-row lifecycle accounting over a persisted state table — the
     observability the reference's ``removeExpiredEntries`` log line
-    provided (cache.js:60-67), as a queryable DataFrame riding the
-    merge job:
+    provided (cache.js:60-67), as a queryable DataFrame:
 
     - ``n_keys`` / ``n_live`` / ``n_expired_tombstones``: physical rows
       vs TTL-live rows vs expired rows still on disk (tombstones purge
@@ -210,50 +122,16 @@ def state_lifecycle_metrics(
       than the logical one — exactly what a vacuum planner needs to
       see);
     - ``n_files`` / ``total_bytes``: filesystem footprint (a
-      compaction trigger: many small files after append-style growth);
-    - ``generation`` / ``n_merges`` / ``generations_reclaimed``
-      (bucketed backend): the generation-swap pointer position, the
-      cumulative merge count, and how many superseded generations were
-      dropped (merges - 1 — each save after the first reclaims one).
+      compaction trigger: many small files after append-style growth).
 
     The key counts are one distributed aggregate over the state table;
     the file walk is driver-side metadata (same class of op as a
     catalog listing), never row data."""
-    if bucketed:
-        import json as _json
-
-        with open(_bucketed_meta_path(state_dir, table), encoding="utf-8") as fh:
-            meta = _json.load(fh)
-        state = spark.table(meta["table"])
-        # resolve the table's DATA LOCATION from the catalog, not path
-        # arithmetic — a metastore database location or explicit-path
-        # table would silently walk a nonexistent guessed dir otherwise
-        loc = next(
-            r.data_type
-            for r in spark.sql(
-                f"DESCRIBE EXTENDED {meta['table']}"
-            ).collect()
-            if r.col_name == "Location"
-        )
-        if "://" in loc and not loc.startswith("file:"):
-            # a remote location (hdfs://, s3a://) would make the local
-            # os.walk below silently report 0 files / 0 bytes — the
-            # exact wrong-dir class this resolution exists to avoid
-            raise ValueError(
-                f"state_lifecycle_metrics walks the local filesystem; "
-                f"table location is remote: {loc}"
-            )
-        root = loc.removeprefix("file:")
-        generation = meta["generation"]
-        n_merges = meta.get("merges", 1)
-    else:
-        root = state_path(state_dir, table)
-        state = spark.read.parquet(root)
-        generation, n_merges = 0, 1
     from .ext.layout import parquet_file_stats
 
+    root = state_path(state_dir, table)
     n_files, total_bytes = parquet_file_stats(root)
-    counts = state.agg(
+    counts = spark.read.parquet(root).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_keys"),
         F.count(F.when(F.col(TTL_COL) >= F.lit(now_epoch_ms), 1))
         .cast("bigint")
@@ -268,63 +146,6 @@ def state_lifecycle_metrics(
         "n_expired_tombstones",
         F.lit(n_files).cast("bigint").alias("n_files"),
         F.lit(total_bytes).cast("bigint").alias("total_bytes"),
-        F.lit(generation).cast("int").alias("generation"),
-        F.lit(n_merges).cast("int").alias("n_merges"),
-        F.lit(max(0, n_merges - 1)).cast("int").alias(
-            "generations_reclaimed"
-        ),
-    )
-
-
-def merge_state_join(
-    state: DataFrame | None,
-    incoming: DataFrame,
-    id_field: str,
-    *,
-    ignore: Sequence[str] = ("updatedOnMs",),
-    ttl_hours: float = 8.0,
-    now_epoch_ms: int | None = None,
-) -> DataFrame:
-    """Join-based MERGE: the state transition as a full-outer join on id —
-    WHEN MATCHED take the update, WHEN NOT MATCHED keep the (live) state row.
-
-    Semantically equal to :func:`merge_state` when ``incoming`` is already
-    one-row-per-key (pipeline.keep_latest_per_key runs first); the payoff is
-    physical: against a bucketed state table the join needs NO shuffle on the
-    state side — only the (much smaller) per-run delta moves, where the
-    union+window path re-shuffles the full state every run. At 100 TB of
-    accumulated state that is the difference between a bucket-local merge and
-    a nightly full-network pass.
-
-    TTL semantics unchanged: expired rows filtered before the join
-    (cache.js:60-67); every seen key gets a fresh TTL (cache.js:79
-    refresh-on-read); unmatched live state keeps its old TTL.
-    """
-    now_epoch_ms = now_ms() if now_epoch_ms is None else now_epoch_ms
-    ttl_ms = now_epoch_ms + int(ttl_hours * 3600 * 1000)
-    updates = (
-        with_content_hash(incoming.filter(F.col(id_field).isNotNull()), exclude=ignore)
-        .select(
-            F.col(id_field),
-            F.col(HASH_COL).alias("__u_hash"),
-            F.lit(ttl_ms).alias("__u_ttl"),
-        )
-    )
-    if state is None:
-        return updates.select(
-            F.col(id_field),
-            F.col("__u_hash").alias(HASH_COL),
-            F.col("__u_ttl").alias(TTL_COL),
-        )
-    live = state.filter(F.col(TTL_COL) >= F.lit(now_epoch_ms)).select(
-        F.col(id_field),
-        F.col(HASH_COL).alias("__s_hash"),
-        F.col(TTL_COL).alias("__s_ttl"),
-    )
-    return live.join(updates, [id_field], "full_outer").select(
-        F.col(id_field),
-        F.coalesce("__u_hash", "__s_hash").alias(HASH_COL),
-        F.coalesce("__u_ttl", "__s_ttl").alias(TTL_COL),
     )
 
 
@@ -458,7 +279,7 @@ def merge_scd2(
     Scale: at 100 TB of accumulated history the closed partition — the bulk
     of the table — is never read into a shuffle; the exchange carries
     |keys| + |batch| rows. This is the history-table analogue of
-    merge_state_join's "state side never shuffles" discipline.
+    the "only the delta moves" discipline.
     """
     cols = [key, attr, ts, tiebreak]
     if history is None:

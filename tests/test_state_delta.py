@@ -248,76 +248,106 @@ def test_apply_cdc_none_state(spark):
     assert {r[0] for r in rows} == {1}
 
 
-# ------------------------------------------------------- state backends
-def test_delta_probe_and_backend_resolution(spark):
-    """Capability probe: this sandbox has no delta-spark, so the probe
-    must say False, 'auto' must fall back to the bucketed backend, and
-    an explicit 'delta' request must fail loudly AT RESOLUTION (not
-    later inside a job) with install guidance."""
-    import pytest
-
-    from entity_etl_spark.state_backend import (
-        delta_available,
-        resolve_backend,
-    )
-
-    assert delta_available(spark) is False
-    assert resolve_backend("auto", spark).name == "bucketed"
-    assert resolve_backend("parquet").name == "parquet"
-    with pytest.raises(RuntimeError, match="delta-spark"):
-        resolve_backend("delta", spark)
-
-
-def test_state_backends_share_merge_contract(spark, tmp_path):
-    """The one-config-swap contract: parquet and bucketed backends run
-    the SAME merge cycle (purge expired -> upsert matched -> insert new
-    -> refresh TTL) and must land on identical state — the vendored-free
-    stand-in proving the interface the Delta MERGE implements natively
-    (reference cache.js:37-42 save-after-run)."""
+# ------------------------------------------------- persisted parquet state
+def test_state_merge_cycle_through_save_load(spark, tmp_path):
+    """Three merge cycles through a real save -> load of the parquet state
+    (reference cache.js:37-42 save-after-run, cache.js:20-35 reload): an
+    unseen key keeps its TTL, a re-seen key gets a fresh one, and once the
+    clock passes expiry only the key seen at that merge survives."""
     from entity_etl_spark.delta import HASH_COL
-    from entity_etl_spark.state import TTL_COL
-    from entity_etl_spark.state_backend import resolve_backend, run_merge_cycle
+    from entity_etl_spark.state import load_state, save_state
 
     t0 = 1_000_000
+    state_dir = str(tmp_path)
     batches = [
         # run 1: three fresh entities
         [(1, "a", 10), (2, "b", 10), (3, "c", 10)],
-        # run 2: 2 changes content, 4 is new, 1 unseen (TTL keeps it),
+        # run 2: 2 changes content, 4 is new, 1 unseen (TTL keeps it)
         [(2, "B", 20), (4, "d", 20)],
         # run 3: only 4 seen again
         [(4, "D", 30)],
     ]
-    finals = {}
-    for kind in ("parquet", "bucketed"):
-        backend = resolve_backend(kind)
-        state_dir = str(tmp_path / kind)
-        for i, rows in enumerate(batches):
-            df = spark.createDataFrame(
-                rows, "id long, payload string, updatedOnMs long"
-            )
-            out = run_merge_cycle(
-                backend, df, state_dir, "entities", "id",
-                ttl_hours=1.0, now_epoch_ms=t0 + i,
-            )
-        finals[kind] = {
-            r["id"]: (r[HASH_COL], r[TTL_COL]) for r in out.collect()
+
+    def cycle(rows, now):
+        df = spark.createDataFrame(
+            rows, "id long, payload string, updatedOnMs long"
+        )
+        nxt = merge_state(
+            load_state(spark, state_dir, "entities"), df, "id",
+            ts_field="updatedOnMs", ttl_hours=1.0, now_epoch_ms=now,
+        )
+        save_state(nxt, state_dir, "entities")
+        return {
+            r["id"]: (r[HASH_COL], r[TTL_COL])
+            for r in load_state(spark, state_dir, "entities").collect()
         }
-    assert finals["parquet"] == finals["bucketed"]
+
+    assert load_state(spark, state_dir, "entities") is None
+    for i, rows in enumerate(batches):
+        final = cycle(rows, t0 + i)
     # all four keys alive (nothing reached TTL expiry at these clocks)
-    assert set(finals["parquet"]) == {1, 2, 3, 4}
+    assert set(final) == {1, 2, 3, 4}
+    assert final[1][1] == final[3][1] == t0 + 3600 * 1000
     # content change rewrote 2's hash; refresh-on-write bumped 4's TTL
-    assert finals["parquet"][4][1] == t0 + 2 + 3600 * 1000
+    h_b2 = with_content_hash(
+        spark.createDataFrame([(2, "B", 0)], "id long, payload string, updatedOnMs long"),
+        exclude=("updatedOnMs",),
+    ).first()[HASH_COL]
+    assert final[2] == (h_b2, t0 + 1 + 3600 * 1000)
+    assert final[4][1] == t0 + 2 + 3600 * 1000
 
     # TTL purge: advance the clock past expiry; only the re-seen key
     # survives the next cycle
-    for kind in ("parquet", "bucketed"):
-        backend = resolve_backend(kind)
-        state_dir = str(tmp_path / kind)
-        df = spark.createDataFrame(
-            [(9, "z", 99)], "id long, payload string, updatedOnMs long"
-        )
-        out = run_merge_cycle(
-            backend, df, state_dir, "entities", "id",
-            ttl_hours=1.0, now_epoch_ms=t0 + 2 + 3600 * 1000 + 1,
-        )
-        assert {r["id"] for r in out.collect()} == {9}, kind
+    assert set(cycle([(9, "z", 99)], t0 + 2 + 3600 * 1000 + 1)) == {9}
+
+
+def test_state_lifecycle_metrics_accounting(spark, tmp_path):
+    """Two merge cycles, then the lifecycle accounting row: live vs
+    expired-tombstone split at an observation time between TTLs, and the
+    file and byte footprint; the next merge purges the tombstone."""
+    from entity_etl_spark.state import (
+        load_state,
+        save_state,
+        state_lifecycle_metrics,
+    )
+
+    sd = str(tmp_path / "state")
+    table = "lc_test"
+    HOUR = 3600 * 1000
+    T0, T1 = 0, 4 * HOUR
+    m1 = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "user_id long, payload string"
+    )
+    save_state(
+        merge_state(None, m1, "user_id", ttl_hours=8, now_epoch_ms=T0),
+        sd, table,
+    )
+    # merge 2 at T1 refreshes keys 2,3 and inserts 4; key 1 keeps ttl T0+8h
+    m2 = spark.createDataFrame(
+        [(2, "b2"), (3, "c2"), (4, "d")], "user_id long, payload string"
+    )
+    s2 = merge_state(load_state(spark, sd, table), m2, "user_id",
+                     ttl_hours=8, now_epoch_ms=T1)
+    save_state(s2, sd, table)
+    # observe at T0+10h: key 1 expired (ttl 8h) but still on disk;
+    # keys 2,3,4 live (ttl 12h)
+    row = state_lifecycle_metrics(
+        spark, sd, table, now_epoch_ms=10 * HOUR
+    ).collect()[0]
+    assert row.n_keys == 4
+    assert row.n_live == 3
+    assert row.n_expired_tombstones == 1
+    assert row.n_files >= 1 and row.total_bytes > 0
+    # the NEXT merge purges the tombstone — the accounting's claim
+    s3 = merge_state(
+        load_state(spark, sd, table),
+        spark.createDataFrame([(5, "e")], "user_id long, payload string"),
+        "user_id", ttl_hours=8, now_epoch_ms=10 * HOUR,
+    )
+    save_state(s3, sd, table)
+    row2 = state_lifecycle_metrics(
+        spark, sd, table, now_epoch_ms=10 * HOUR
+    ).collect()[0]
+    assert row2.n_keys == 4  # 2,3,4 live + 5 inserted; 1 purged
+    assert row2.n_live == 4
+    assert row2.n_expired_tombstones == 0

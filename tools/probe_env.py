@@ -5,7 +5,6 @@ SURVEY.md §8 stays auditable.
 Probes (all capabilities the repo gates behind import-try / runtime
 fallbacks, with the feature each one would unlock):
 
-- delta-spark      -> live Delta MERGE INTO state backend (state_backend.py)
 - google.protobuf  -> live transformWithStateInPandas (streaming.py TWS twin)
 - avro / fastavro  -> python-side Avro; plus a LIVE format("avro") round-trip
                       attempt (Spark ships avro core jars for internal use,
@@ -29,7 +28,6 @@ import sys
 import time
 
 MODULES = (
-    "delta",
     "google.protobuf",
     "avro",
     "fastavro",
@@ -60,7 +58,7 @@ def probe() -> dict:
     jar_dir = os.path.join(os.path.dirname(pyspark.__file__), "jars")
     out["relevant_jars"] = sorted(
         os.path.basename(j)
-        for pat in ("*avro*", "*delta*", "*protobuf*")
+        for pat in ("*avro*", "*protobuf*")
         for j in glob.glob(os.path.join(jar_dir, pat))
     )
 
