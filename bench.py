@@ -18,6 +18,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import SparkSession  # noqa: E402
+
 # sf1 quiet bests — per-query MIN of the round-11 quiet runs
 # (BENCH_sf1_r11.json, post-optimization code; two full runs via
 # tools/merge_bench_min). The reworked queries re-based DOWN
@@ -235,64 +237,12 @@ SF01_REF_BESTS: dict[str, float] = {
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from entity_etl_spark.queries import REGISTRY
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").split("sf")[-1]
-
-    # local[N] shares ONE heap across all N executor threads; at sf1 the
-    # exact-join working set exceeds 16g's execution-memory fraction and
-    # the run pays GC + shuffle spill (measured 18-20 s steady vs 11-15 s
-    # at 48g for dedup_corpus_minhash). A real cluster sizes per-executor
-    # heaps; this is the local-mode equivalent, not engine tuning.
-    default_mem = {"1": "48g", "10": "64g"}.get(sf, "16g")
-
-    # AQE partition sizing: r9 promoted the r8 lesson (512 initial at
-    # sf10 fixes the final-agg sort-spill; the same wide start measured
-    # ~3x HARMFUL at sf1) from this harness into the ENGINE —
-    # session.aqe_initial_partitions keys the start width on scanned
-    # input bytes (1 GiB threshold, ~4 MiB compressed per partition,
-    # pow2, clamped). The bench consumes the engine policy so the
-    # numbers measure what a deployment actually gets; at the measured
-    # anchors it reproduces the r8 confs exactly (sf10 1.81 GB -> 512,
-    # sf1 172 MB -> cpus, sf0.1 -> cpus).
-    from entity_etl_spark.session import (
-        aqe_initial_partitions,
-        estimate_input_bytes,
-    )
-
-    initial_parts = str(
-        aqe_initial_partitions(
-            estimate_input_bytes(sf_dir), int(cpus) if cpus.isdigit() else 32
-        )
-    )
-
-    spark = (
-        SparkSession.builder.appName("entity-etl-spark-bench")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            initial_parts,
-        )
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # small test-scale files must still split across all cores; at real
-        # scale files exceed this and the default behavior is identical
-        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEMORY", default_mem),
-        )
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_spark(sf_dir)
 
     bench_queries = [name for name, q in REGISTRY.items() if "bench" in q.tags]
     # additive group (round-2 heavy operators): timed identically but summed
@@ -313,35 +263,12 @@ def main() -> None:
     REGISTRY[bench_queries[0]].fn(spark, sf_dir).count()
 
     # Scaling evidence (r12, VERDICT item 2): per-query executed job /
-    # stage / task counts, read from the DAGScheduler job counter + the
-    # public StatusTracker AFTER the timed runs — the probe adds nothing
-    # to the timed path. The driver's low-core probe can then tell
+    # stage / task counts of run 1, read right after it and outside the
+    # timed region. The driver's low-core probe can then tell
     # overhead-bound (few tasks, ratio ~1 at tiny SF) from genuinely
     # serial (tasks >> cores but ratio ~1) instead of flagging
     # suspect_cpus_ignored on sub-second queries.
-    sc = spark.sparkContext
-
-    def _next_job_id() -> int:
-        v = sc._jsc.sc().dagScheduler().nextJobId()
-        return v if isinstance(v, int) else int(v.get())
-
     query_stats: dict[str, dict[str, int]] = {}
-
-    def _collect_stats(name: str, j0: int, j1: int) -> None:
-        tracker = sc.statusTracker()
-        stages: set[int] = set()
-        for jid in range(j0, j1):
-            info = tracker.getJobInfo(jid)
-            if info is not None:
-                stages.update(info.stageIds)
-        tasks = 0
-        for sid in stages:
-            sinfo = tracker.getStageInfo(sid)
-            if sinfo is not None:
-                tasks += sinfo.numTasks
-        query_stats[name] = {
-            "jobs": j1 - j0, "stages": len(stages), "tasks": tasks
-        }
 
     # best-of-2 per query: the second run amortizes codegen compilation and
     # GC noise, so round-over-round comparisons track plan quality, not JIT
@@ -349,17 +276,16 @@ def main() -> None:
         timings: dict[str, float] = {}
         for name in names:
             best = float("inf")
-            run1_jobs: tuple[int, int] | None = None
             for run in range(2):
-                j0 = _next_job_id()
+                j0 = next_job_id(spark)
                 t0 = time.perf_counter()
                 REGISTRY[name].fn(spark, sf_dir).count()
                 best = min(best, time.perf_counter() - t0)
                 if run == 0:
-                    run1_jobs = (j0, _next_job_id())
+                    query_stats[name] = job_stats(
+                        spark, j0, next_job_id(spark)
+                    )
             timings[name] = round(best, 3)
-            if run1_jobs is not None:
-                _collect_stats(name, *run1_jobs)
             # a query that persists internally (item_item_cosine_topk's
             # 4-consumer cp set) must not pin executor storage for every
             # LATER query's memory budget — clear between queries (no-op
@@ -534,6 +460,74 @@ def main() -> None:
         )
     )
     spark.stop()
+
+
+def bench_spark(sf_dir: str) -> SparkSession:
+    """The bench session: ``session.get_spark`` sized for ``sf_dir`` plus
+    the two harness settings. Every tool that claims bench-identical
+    numbers (``tools/time_query.py``, ``tools/explain_to_file.py``) builds
+    its session here.
+
+    AQE start width comes from the engine policy
+    (``session.aqe_initial_partitions`` keyed on the input bytes), so the
+    numbers measure what a deployment gets: at the measured anchors it
+    reproduces the r8 confs (sf10 1.81 GB -> 512, sf1 172 MB -> cpus,
+    sf0.1 -> cpus)."""
+    from entity_etl_spark.session import estimate_input_bytes, get_spark
+
+    # local[N] shares ONE heap across all N executor threads; at sf1 the
+    # exact-join working set exceeds 16g's execution-memory fraction and
+    # the run pays GC + shuffle spill (measured 18-20 s steady vs 11-15 s
+    # at 48g for dedup_corpus_minhash). A real cluster sizes per-executor
+    # heaps; this is the local-mode equivalent, not engine tuning.
+    sf = sf_dir.rstrip("/").split("sf")[-1]
+    os.environ.setdefault(
+        "SPARK_DRIVER_MEMORY", {"1": "48g", "10": "64g"}.get(sf, "16g")
+    )
+    spark = get_spark(
+        app_name="entity-etl-spark-bench",
+        input_bytes=estimate_input_bytes(sf_dir),
+        extra_conf={
+            # small test-scale files must still split across all cores; at
+            # real scale files exceed this and the default is identical
+            "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
+            # the status store must hold one whole query's jobs/stages so
+            # job_stats reads complete counts (streaming harnesses run
+            # hundreds of jobs per query)
+            "spark.ui.retainedJobs": "20000",
+            "spark.ui.retainedStages": "20000",
+        },
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def next_job_id(spark: SparkSession) -> int:
+    """The DAGScheduler's job counter. Job-group attribution is
+    thread-local and misses jobs that Structured Streaming's micro-batch
+    thread submits; this monotonically increasing counter sees every job
+    regardless of submitting thread."""
+    v = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    return v if isinstance(v, int) else int(v.get())
+
+
+def job_stats(spark: SparkSession, j0: int, j1: int) -> dict[str, int]:
+    """Executed jobs/stages/tasks for job ids ``[j0, j1)``, read from the
+    public StatusTracker. Call it outside any timed region: it waits for
+    the asynchronously updated status store to settle."""
+    time.sleep(0.5)
+    tracker = spark.sparkContext.statusTracker()
+    stages: set[int] = set()
+    for jid in range(j0, j1):
+        info = tracker.getJobInfo(jid)
+        if info is not None:
+            stages.update(info.stageIds)
+    tasks = 0
+    for sid in stages:
+        sinfo = tracker.getStageInfo(sid)
+        if sinfo is not None:
+            tasks += sinfo.numTasks
+    return {"jobs": j1 - j0, "stages": len(stages), "tasks": tasks}
 
 
 if __name__ == "__main__":

@@ -8,7 +8,7 @@ similarity search, text analysis, multimodal columns).
 
 Module map (see SURVEY.md §7.1):
 
-- ``session``    — SparkSession builder with scale-appropriate defaults
+- ``session``    — SparkSession factory with scale-appropriate defaults
 - ``model``      — TableSpec / EngineConfig dataclasses
 - ``mapping``    — projection-spec compiler (reference templates/*.hbs, O6-O9)
 - ``delta``      — changed-row detection via content hash (reference

@@ -286,112 +286,6 @@ def run_available_now(
         )
 
 
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas twin (Spark 4 StatefulProcessor API)
-# ---------------------------------------------------------------------------
-
-try:  # the API landed in Spark 4.0; guard so older runtimes still import.
-    # Runtime also needs protobuf: the TWS state server speaks a protobuf
-    # protocol (pyspark/sql/streaming/proto/StateMessage_pb2) — absent in
-    # some minimal environments, so gate on both.
-    import google.protobuf.descriptor  # noqa: F401
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    _HAS_TWS = True
-except ImportError:  # pragma: no cover
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    _HAS_TWS = False
-
-
-class TtlDedupProcessor(StatefulProcessor):
-    """The cache.js contract (change-detect + last-write-wins + TTL purge +
-    refresh-on-read) on the Spark 4 ``transformWithStateInPandas`` API —
-    the successor of :func:`stateful_ttl_dedup`'s applyInPandasWithState.
-
-    What the new API buys at scale: typed per-key ValueState with a
-    *native* TTL (``ttlDurationMs`` — the state store expires keys without
-    a user-managed timer, exactly cache.js:60-67), incremental state
-    checkpointing (RocksDB changelog), and the same Arrow batch transfer.
-    The Python side stays vectorized: the emit rule collapses to one
-    shifted-series compare per key-batch (see ``_ttl_dedup_fn``); the
-    content hash arrives pre-computed JVM-side so batch and streaming
-    dedup states stay interchangeable.
-    """
-
-    def __init__(self, id_field: str, ts_field: str, ttl_ms: int,
-                 out_columns: Sequence[str]):
-        self._id = id_field
-        self._ts = ts_field
-        self._ttl_ms = ttl_ms
-        self._out_cols = list(out_columns)
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        # native state TTL: refresh happens on every update (refresh-on-read)
-        self._h = handle.getValueState(
-            "h", "h string", ttlDurationMs=self._ttl_ms
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        prev = self._h.get() if self._h.exists() else None
-        prev_hash = prev[0] if prev is not None else None
-        for pdf in rows:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values(self._ts)
-            h = pdf[_TTL_HASH_COL]
-            shifted = h.shift(1)
-            if prev_hash is not None:
-                shifted.iloc[0] = prev_hash
-            keep = h.ne(shifted)
-            prev_hash = h.iloc[-1]
-            out = pdf.loc[keep, self._out_cols]
-            if len(out):
-                yield out
-        # update == TTL refresh for this key, even when nothing was emitted
-        self._h.update((prev_hash,))
-
-    def close(self) -> None:
-        pass
-
-
-def stateful_ttl_dedup_tws(
-    stream: DataFrame,
-    spec: TableSpec,
-    ttl_hours: float = 8.0,
-) -> DataFrame:
-    """:func:`stateful_ttl_dedup` re-expressed on transformWithStateInPandas.
-
-    Same semantics, pinned equal by ``tests/test_streaming.py``; prefer
-    this variant on Spark 4 state stores (RocksDB + changelog
-    checkpointing) — TTL is enforced by the store itself instead of a
-    per-key processing-time timer."""
-    if not _HAS_TWS:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires Spark >= 4.0 and the "
-            "protobuf package (the TWS state-server protocol)"
-        )
-    out_schema = stream.schema
-    hashed = stream.withColumn(
-        _TTL_HASH_COL, content_hash(stream.columns, exclude=(spec.ts_field,))
-    )
-    proc = TtlDedupProcessor(
-        spec.id_field,
-        spec.ts_field,
-        int(ttl_hours * 3600 * 1000),
-        stream.columns,
-    )
-    return (
-        hashed.filter(F.col(spec.id_field).isNotNull())
-        .groupBy(spec.id_field)
-        .transformWithStateInPandas(
-            proc,
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="ProcessingTime",
-        )
-    )
-
-
 def require_local_state_paths(*paths: str) -> None:
     """Reject URI-schemed state/checkpoint paths for the per-batch-slot
     state discipline.

@@ -13,9 +13,13 @@
 3. The packed pair key survives ids >= 2^31 (ADVICE r8): unpack uses
    shiftrightunsigned, so the stated [0, 2^32) precondition actually
    holds instead of sign-extending into negative ids.
+4. One session factory: bench.py, the tools and the package build their
+   SparkSession only through ``session.get_spark``, and bench's run-1
+   job/stage/task counter reads real counts.
 """
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -108,3 +112,35 @@ def test_packed_pair_key_roundtrip_above_2e31(spark):
     ).collect()
     for r in out:
         assert (r["ua"], r["ub"]) == (r["pa"], r["pb"])
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_only_session_py_builds_a_session():
+    # a second builder chain drifts from get_spark's confs (the old tool
+    # copies skipped the AQE start width and the Arrow conf)
+    paths = [os.path.join(REPO, "bench.py")]
+    for top in ("tools", "entity_etl_spark", "perfbench"):
+        for root, _dirs, files in os.walk(os.path.join(REPO, top)):
+            paths += [os.path.join(root, f) for f in files if f.endswith(".py")]
+    builders = []
+    for path in paths:
+        rel = os.path.relpath(path, REPO)
+        if rel == os.path.join("entity_etl_spark", "session.py"):
+            continue
+        with open(path, encoding="utf-8") as fh:
+            if re.search(r"SparkSession\.builder", fh.read()):
+                builders.append(rel)
+    assert builders == []
+
+
+def test_bench_job_stats_counts_a_query(spark):
+    import bench
+
+    j0 = bench.next_job_id(spark)
+    spark.range(100).groupBy((F.col("id") % 3).alias("k")).count().collect()
+    stats = bench.job_stats(spark, j0, bench.next_job_id(spark))
+    assert stats["jobs"] >= 1
+    assert stats["stages"] >= 1
+    assert stats["tasks"] >= 1

@@ -2,7 +2,6 @@
 checkpoint (O1/O14), streaming changed-row suppression (O5), stateful TTL
 dedup (O12/O13)."""
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -202,47 +201,6 @@ def test_run_streaming_prep_cross_batch_dedup(spark, tmp_path):
     assert {r.doc_id for r in all_rows} == {1, 3, 11}  # 10 deduped cross-batch
     # split column survives the partitioned write
     assert all(r.split in ("train", "val", "test") for r in all_rows)
-
-
-def test_transform_with_state_ttl_dedup_matches_applyinpandas(spark, tmp_path):
-    """The Spark 4 transformWithStateInPandas variant reproduces the exact
-    cache.test.js truth table the applyInPandasWithState path pins — the
-    two stateful APIs are behavioral twins."""
-    from entity_etl_spark.streaming import _HAS_TWS, stateful_ttl_dedup_tws
-
-    if not _HAS_TWS:
-        pytest.skip(
-            "transformWithStateInPandas needs google.protobuf (state-server "
-            "protocol), absent in this environment"
-        )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        src = str(tmp_path / "src")
-        ckpt = str(tmp_path / "ckpt")
-        xform = lambda s: stateful_ttl_dedup_tws(s, SPEC, ttl_hours=8.0)
-
-        write_batch(spark, src, [(1, 11, 0), (2, 12, 1), (3, 13, 2)], 1)
-        got1 = drain(spark, src, ckpt, xform)
-        assert sorted(r["id"] for r in got1) == [1, 2, 3]
-
-        write_batch(
-            spark, src, [(1, 11, 3), (2, 24, 4), (3, 13, 2), (4, 14, 5)], 2
-        )
-        got2 = drain(spark, src, ckpt, xform)
-        assert sorted(r["id"] for r in got2) == [2, 4]
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
 
 
 def test_stream_static_broadcast_enrichment(spark, tmp_path):

@@ -10,6 +10,7 @@ Usage: python tools/audit_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
@@ -23,19 +24,12 @@ PY = re.compile(
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
     from entity_etl_spark.queries import REGISTRY
+    from entity_etl_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
+    spark = get_spark(app_name="audit-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     nlj_hits: dict[str, int] = {}

@@ -45,9 +45,9 @@ def canon(rows, columns):
 
 def main() -> int:
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
+    from entity_etl_spark.session import get_spark
 
     args = sys.argv[1:]
     json_out = None
@@ -57,21 +57,16 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    spark = (
-        SparkSession.builder.master(
-            os.environ.get("PARITY_MASTER", "local[8]")
-        )
-        # 16g default; sf10 spot runs pass PARITY_DRIVER_MEMORY=64g —
-        # the bench-harness sizing lesson applied to this harness too
-        .config("spark.driver.memory",
-                os.environ.get("PARITY_DRIVER_MEMORY", "16g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions",
-                os.environ.get("PARITY_SHUFFLE_PARTITIONS", "8"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # 16g default heap; sf10 spot runs pass SPARK_DRIVER_MEMORY=48g-64g —
+    # the bench-harness sizing lesson applied to this harness too
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
+
+    def new_session():
+        s = get_spark(app_name="check-parity")
+        s.sparkContext.setLogLevel("ERROR")
+        return s
+
+    spark = new_session()
     con = duckdb.connect()
     # keep oracle spill OUT of the repo (r5 committed 4.6 GB of
     # .tmp/duckdb_temp_storage-* into history) and bound it: an oracle
@@ -100,8 +95,8 @@ def main() -> int:
         cascading spurious FAILs to every remaining query. The retry
         rebuilds the session so one harness crash can't taint the
         artifact; a query that fails twice in a row is a real failure.
-        (driver.memory in the retry builder is a no-op — the JVM is
-        already up — the real sizing is the first builder's.)"""
+        (driver.memory in the retry session is a no-op — the JVM is
+        already up — the real sizing is the first session's.)"""
         nonlocal spark
         try:
             sdf = fn(spark, sf_dir)
@@ -111,15 +106,7 @@ def main() -> int:
                 spark.stop()
             except Exception:
                 pass
-            spark = (
-                SparkSession.builder.master("local[8]")
-                .config("spark.driver.memory", "16g")
-                .config("spark.sql.session.timeZone", "UTC")
-                .config("spark.sql.shuffle.partitions", "8")
-                .config("spark.ui.enabled", "false")
-                .getOrCreate()
-            )
-            spark.sparkContext.setLogLevel("ERROR")
+            spark = new_session()
             print(f"RETRY {name} in a fresh session after: "
                   f"{type(first_err).__name__}")
             try:

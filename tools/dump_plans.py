@@ -9,6 +9,7 @@ Usage: python tools/dump_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
@@ -21,21 +22,12 @@ INTERESTING = re.compile(
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from entity_etl_spark.queries import REGISTRY
+    from entity_etl_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
+    spark = get_spark(app_name="dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     lines = [

@@ -3,7 +3,9 @@
 Usage: python tools/explain_to_file.py SF_DIR OUT_DIR QUERY [QUERY...]
 
 Writes OUT_DIR/<query>.txt with the formatted physical plan (the
-round-deliverable `plans/r*/<query>_{before,after}.txt` evidence).
+round-deliverable `plans/r*/<query>_{before,after}.txt` evidence), planned
+in the bench session (``bench.bench_spark``) so the plan is the one the
+bench times.
 Queries that trigger driver-side work during plan build (streaming
 micro-batch runners, state materialization) still produce the plan of
 the RESULT DataFrame — the artifact documents the declared query's
@@ -19,26 +21,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
+    from bench import bench_spark
     from entity_etl_spark.queries import REGISTRY
 
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
     os.makedirs(out_dir, exist_ok=True)
-    spark = (
-        SparkSession.builder.appName("explain-to-file")
-        .master("local[8]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_spark(sf_dir)
     jvm_mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )

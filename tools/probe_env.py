@@ -5,7 +5,6 @@ SURVEY.md §8 stays auditable.
 Probes (all capabilities the repo gates behind import-try / runtime
 fallbacks, with the feature each one would unlock):
 
-- google.protobuf  -> live transformWithStateInPandas (streaming.py TWS twin)
 - avro / fastavro  -> python-side Avro; plus a LIVE format("avro") round-trip
                       attempt (Spark ships avro core jars for internal use,
                       but the spark-avro DSv2 module is a separate artifact)
@@ -27,8 +26,9 @@ import os
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 MODULES = (
-    "google.protobuf",
     "avro",
     "fastavro",
     "PIL",
@@ -57,20 +57,14 @@ def probe() -> dict:
     out["pyspark_version"] = pyspark.__version__
     jar_dir = os.path.join(os.path.dirname(pyspark.__file__), "jars")
     out["relevant_jars"] = sorted(
-        os.path.basename(j)
-        for pat in ("*avro*", "*protobuf*")
-        for j in glob.glob(os.path.join(jar_dir, pat))
+        os.path.basename(j) for j in glob.glob(os.path.join(jar_dir, "*avro*"))
     )
 
     # live spark-avro probe: core avro jars ship with Spark but the
     # format("avro") DSv2 module (spark-avro_2.13) is a separate artifact
-    from pyspark.sql import SparkSession
+    from entity_etl_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[2]")
-        .appName("probe_env")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="probe_env")
     import tempfile
 
     d = tempfile.mkdtemp(prefix="probe_avro_")

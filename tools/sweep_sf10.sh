@@ -62,8 +62,7 @@ N=$(python -c "import json;print(len(json.load(open('$OUT/chunks.json'))))")
 for i in $(seq 0 $((N-1))); do
   Q=$(python -c "import json;print(' '.join(json.load(open('$OUT/chunks.json'))[$i]))")
   echo "=== chunk $i: starting $(date -u +%H:%M:%S) ==="
-  PARITY_MASTER="local[16]" PARITY_DRIVER_MEMORY=48g \
-  PARITY_SHUFFLE_PARTITIONS=32 PARITY_DUCKDB_TEMP_CAP=24GB \
+  SPARK_GRAFT_CPUS=16 SPARK_DRIVER_MEMORY=48g PARITY_DUCKDB_TEMP_CAP=24GB \
   timeout 7200 python tools/check_parity.py --json "$OUT/chunk$i.json" "$SF" $Q \
     > "$OUT/chunk$i.log" 2>&1
   echo "=== chunk $i: exit $? $(date -u +%H:%M:%S) ==="

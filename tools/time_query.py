@@ -1,11 +1,16 @@
-"""Solo query timer: fresh JVM, bench-identical config, one query.
+"""Solo query timer: fresh JVM, the bench session (``bench.bench_spark``),
+one or more queries.
 
 Usage: python tools/time_query.py SF_DIR QUERY [QUERY...]
-Env: TQ_CPUS (default 32), TQ_MEM (default 16g), TQ_PARTS (default
-TQ_CPUS), TQ_INITIAL_PARTS (default TQ_PARTS), TQ_RUNS (default 2,
-best-of). Prints one JSON line {query: best_sec, ...} — the A/B harness
-for partition-sizing / plan experiments without dragging a whole bench
-run behind one knob.
+
+Runs each query twice, exactly as bench.py's timed loop does. Prints one
+JSON line {query: best_sec, ...} on stdout — the fragment format
+tools/assemble_bench.py min-merges — and, per query, one
+``## name: {"sec", "jobs", "stages", "tasks"}`` line on stderr with run
+1's executed Spark job/stage/task counts (``bench.job_stats``): the
+evidence for "this change removed N Spark jobs" claims, where wall-clock
+alone is noise-bound at sf0.1. Size the run with SPARK_GRAFT_CPUS and
+SPARK_DRIVER_MEMORY, as for bench.py.
 """
 
 from __future__ import annotations
@@ -19,47 +24,28 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
+    from bench import bench_spark, job_stats, next_job_id
     from entity_etl_spark.queries import REGISTRY
 
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
-    cpus = os.environ.get("TQ_CPUS", "32")
-    mem = os.environ.get("TQ_MEM", "16g")
-    parts = os.environ.get("TQ_PARTS", cpus)
-    initial = os.environ.get("TQ_INITIAL_PARTS", parts)
-    runs = int(os.environ.get("TQ_RUNS", "2"))
-
-    spark = (
-        SparkSession.builder.appName("tq")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", parts)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            initial,
-        )
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
-        .config("spark.driver.memory", mem)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_spark(sf_dir)
     REGISTRY["incremental_scan"].fn(spark, sf_dir).count()  # warm-up
 
     out = {}
     for name in names:
         best = float("inf")
-        for _ in range(runs):
+        for run in range(2):
+            j0 = next_job_id(spark)
             t0 = time.perf_counter()
             REGISTRY[name].fn(spark, sf_dir).count()
             best = min(best, time.perf_counter() - t0)
+            if run == 0:
+                stats = job_stats(spark, j0, next_job_id(spark))
         out[name] = round(best, 3)
-        print(f"## {name}: {out[name]}s", file=sys.stderr, flush=True)
+        print(f"## {name}: {json.dumps({'sec': out[name], **stats})}",
+              file=sys.stderr, flush=True)
+        spark.catalog.clearCache()
     print(json.dumps(out))
     spark.stop()
 

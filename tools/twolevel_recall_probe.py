@@ -26,21 +26,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from entity_etl_spark.ext import ivf, semdedup
+    from entity_etl_spark.session import get_spark
 
     sf_dir = sys.argv[1]
     out_path = sys.argv[2]
-    spark = (
-        SparkSession.builder.appName("twolevel-recall")
-        .master("local[32]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
+    spark = get_spark(app_name="twolevel-recall")
     spark.sparkContext.setLogLevel("ERROR")
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     n = emb.count()
