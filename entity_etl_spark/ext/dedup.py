@@ -1114,7 +1114,6 @@ def minhash_dedup_incremental(
     k: int = 3,
     verify_threshold: float = 0.5,
     max_bucket_size: int | None = None,
-    new_sigs_only: bool = False,
     candidate_pushdown_limit: int | None = 1_000,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental NEAR-dup dedup: drop batch docs near-duplicate to the
@@ -1122,14 +1121,14 @@ def minhash_dedup_incremental(
     twin of :func:`exact_dedup_incremental`, completing the incremental
     dedup story for continuously-fed training pipelines.
 
-    With ``new_sigs_only=True`` the second return value is ONLY the
-    state DELTA: batch survivors' signatures, plus — on a first run
-    where ``corpus_sigs`` had to be computed in-call from a non-empty
-    ``corpus`` — those corpus signatures too (they exist nowhere else
-    yet, so omitting them would make later increments silently blind to
-    the original corpus). Pair it with state.append_state so per-batch
-    state persistence costs O(batch) instead of rewriting the
-    accumulated table every increment.
+    The second return value is the state DELTA: batch survivors'
+    signatures, plus — on a first run where ``corpus_sigs`` had to be
+    computed in-call from ``corpus`` — those corpus signatures too (they
+    exist nowhere else yet, so omitting them would make later increments
+    silently blind to the original corpus). Pair it with
+    state.append_state so per-batch state persistence costs O(batch)
+    instead of rewriting the accumulated table every increment; the next
+    state is the old state ∪ the delta.
 
     ``candidate_pushdown_limit``: the verify step needs corpus BODIES
     only for docs in a candidate pair. The semi-join inside
@@ -1144,10 +1143,9 @@ def minhash_dedup_incremental(
 
     ``corpus_sigs`` is the persisted signature STATE (one (doc, sig) row
     per kept corpus doc; computed from ``corpus`` on the first run).
-    Returns ``(kept_batch, next_sigs)``: batch survivors, and the
-    signature state grown by exactly the survivors' signatures — corpus
-    BODIES are touched only for docs appearing in a candidate pair (the
-    verify semi-join), never rescanned wholesale.
+    Returns ``(kept_batch, new_sigs)``: batch survivors and the delta
+    above — corpus BODIES are touched only for docs appearing in a
+    candidate pair (the verify semi-join), never rescanned wholesale.
 
     Scale: per increment, signature cost is O(|batch| shingles) map-side;
     the LSH band join shuffles (doc, band-bucket) longs; verification
@@ -1160,14 +1158,13 @@ def minhash_dedup_incremental(
     priority column for the id in the pair ordering.
     """
     rows_per_band = num_hashes // bands
-    computed_corpus_sigs = None
-    if corpus_sigs is None:
+    first_run = corpus_sigs is None
+    if first_run:
         # first run only: fold the corpus once and pin it — every later
         # increment loads the persisted state instead
         corpus_sigs = minhash_signatures(
             corpus, id_col, text_col, num_hashes, k
         ).localCheckpoint(eager=True)
-        computed_corpus_sigs = corpus_sigs
     # pinned because it has THREE consumers (band buckets, kept_sigs,
     # and the caller's state persist) — without the barrier each one
     # re-runs the full shingle fold over the batch lineage, which for a
@@ -1208,15 +1205,9 @@ def minhash_dedup_incremental(
     kept_sigs = batch_sigs.join(
         kept.select(F.col(id_col).alias("doc")), "doc", "left_semi"
     )
-    if new_sigs_only:
-        # the delta must include in-call-computed corpus signatures: they
-        # are persisted nowhere else, and a caller pairing this with
-        # append_state would otherwise lose the original corpus from the
-        # state forever (later increments silently stop matching it)
-        if computed_corpus_sigs is not None:
-            return kept, computed_corpus_sigs.unionByName(kept_sigs)
-        return kept, kept_sigs
-    return kept, corpus_sigs.unionByName(kept_sigs)
+    if first_run:
+        return kept, corpus_sigs.unionByName(kept_sigs)
+    return kept, kept_sigs
 
 
 def exact_neardup_dedup_incremental(
@@ -1225,12 +1216,10 @@ def exact_neardup_dedup_incremental(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    corpus_shingles: DataFrame | None = None,
-    corpus_sizes: DataFrame | None = None,
+    state: tuple[DataFrame, DataFrame] | None = None,
     k: int = 3,
     threshold: float = 0.5,
-    new_shingles_only: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Incremental near-dup dedup with EXACT recall: drop batch docs whose
     n-gram Jaccard with the accumulated corpus (or a smaller-id batch
     sibling) reaches ``threshold`` — same keep-min-id policy as
@@ -1240,206 +1229,111 @@ def exact_neardup_dedup_incremental(
     contract at any corpus size (the r5 sf1 rehearsal showed LSH
     signatures silently keep extra near-threshold docs).
 
-    State layouts, newest preferred:
-
-    - TWO-TABLE (r12): ``corpus_shingles`` = narrow ``(doc, sh)`` rows
-      plus ``corpus_sizes`` = one ``(doc, n)`` row per doc (``n`` the
-      doc's distinct-shingle-set size, immutable per doc). The pair
-      join's fan-out frame then carries only the two ids and the
-      aggregation keeps one count buffer; sizes attach on the
-      (candidate-bounded) aggregated pair set.
-    - single-table (r11): ``(doc, sh, n)`` rows, sizes riding every row.
-    - legacy (pre-r11): bare ``(doc, sh)``; sizes re-derived on load,
-      including the mixed-dir case (a doc with rows in BOTH layouts is
-      recounted over all its deduped rows).
+    ``state`` is ``(shingles, sizes)``: narrow ``(doc, sh)`` rows, one
+    per distinct k-shingle per kept doc, plus one ``(doc, n)`` row per
+    doc (``n`` the doc's distinct-shingle-set size, immutable per doc).
+    ``None`` means a first run: the state is computed from ``corpus``.
+    Directories written by older layouts are converted once with
+    ``tools/migrate_neardup_state.py``.
 
     Both sides of the candidate equi-join carry complete shingle sets, so
     the per-pair match count IS the exact intersection — no verification
     pass and NO document-body reads at all: per increment the corpus
     contributes only a columnar scan of the (doc, sh) state. The join's
     right side is restricted to batch docs (corpus-corpus pairs settled
-    in earlier increments), keeping fan-out at O(shared-shingle x batch).
+    in earlier increments), keeping fan-out at O(shared-shingle x batch);
+    the fan-out frame carries only the two ids and the aggregation keeps
+    one count buffer, with sizes attached on the aggregated pair set.
 
-    Returns ``(kept_batch, next_shingles)``; with ``new_shingles_only``
-    the second value is only the state delta (batch survivors' shingles,
-    plus first-run corpus shingles — see minhash_dedup_incremental's
-    note), pairing with state.append_state for O(batch) state growth.
-    The loaded state is deduped on (doc, sh) first: at-least-once replay
-    of a crashed append may duplicate rows, and duplicated shingles would
-    corrupt the intersection counts. At 100 TB bucket the state by ``sh``
-    (sinks.write_bucketed) so the candidate join is shuffle-free, and
-    store ``xxhash64(sh)`` instead of the shingle text to cut state bytes
-    ~3x (in-doc collisions are ~2^-64-improbable but make the operator
-    no-longer-bitwise-exact; the text form here keeps the contract
-    airtight)."""
-    computed = None
-    batch_ids = F.broadcast(
-        batch.select(F.col(id_col).alias("doc")).distinct()
-    )
-    sizes_state = None
-    if corpus_shingles is None:
-        corpus_shingles = (
-            _shingle_rows_with_size(
-                _spread_input(corpus), id_col, text_col, k
-            )
-            .localCheckpoint(eager=True)
+    Returns ``(kept_batch, new_shingles, new_sizes)``: the batch
+    survivors and the state DELTA in the two state shapes — the
+    survivors' rows, plus on a first run the computed corpus rows (they
+    are persisted nowhere else yet). Pair it with state.append_state for
+    O(batch) state growth. The loaded state is deduped first, and the
+    batch's own ids are excluded from it: at-least-once replay of a
+    crashed append may duplicate rows or leave a replayed batch's docs in
+    the state, and either would corrupt the intersection counts. At
+    100 TB bucket the state by ``sh`` (sinks.write_bucketed) so the
+    candidate join is shuffle-free, and store ``xxhash64(sh)`` instead of
+    the shingle text to cut state bytes ~3x (in-doc collisions are
+    ~2^-64-improbable but make the operator no-longer-bitwise-exact; the
+    text form here keeps the contract airtight)."""
+    if state is None:
+        # first run only: fold the corpus once and pin it — every later
+        # increment loads the persisted state instead
+        computed = _shingle_rows_with_size(
+            _spread_input(corpus), id_col, text_col, k
+        ).localCheckpoint(eager=True)
+        corpus_sh = computed.select("doc", "sh")
+        sizes_state = computed.select("doc", "n").dropDuplicates(["doc"])
+    else:
+        # replay sanitation, on BOTH tables, before anything counts:
+        # - dropDuplicates: a crashed append may have persisted duplicate
+        #   rows, and duplicated shingles inflate intersection counts;
+        # - anti-join on batch ids: a REPLAYED batch's docs may already be
+        #   in the state wholesale — keeping both copies would double
+        #   those docs' shingles, shifting every affected Jaccard
+        #   (2i/(2na+nb-2i) != i/(na+nb-i)), i.e. wrong drops/keeps.
+        #   Excluding the state copy re-evaluates the doc as a batch doc,
+        #   and drops the orphan size rows a crash between the two
+        #   appends leaves behind; the batch-ids side is tiny → broadcast.
+        batch_ids = F.broadcast(
+            batch.select(F.col(id_col).alias("doc")).distinct()
         )
-        computed = corpus_shingles
-    elif corpus_sizes is not None:
-        # TWO-TABLE state (r12): narrow (doc, sh) shingle rows plus a
-        # tiny (doc, n) sizes table. The pair join's fan-out frame —
-        # the one giant frame in this op — then carries ONLY
-        # (doc_a, doc_b), and the per-pair aggregation keeps a single
-        # count buffer; sizes re-attach on the aggregated pair set
-        # (candidate-pair-bounded), the same narrow-through-the-fan-out
-        # correction r11 measured on the batch pair family. Replay
-        # sanitation (see the single-table branch's comment) applies to
-        # BOTH tables: dedup each, then exclude the batch's own ids —
-        # a crashed append of either table is repaired wholesale by the
-        # replayed batch re-appending both.
-        corpus_shingles = (
-            corpus_shingles.select("doc", "sh")
+        shingles_state, sizes_loaded = state
+        corpus_sh = (
+            shingles_state.select("doc", "sh")
             .dropDuplicates(["doc", "sh"])
             .join(batch_ids, "doc", "left_anti")
         )
         sizes_state = (
-            corpus_sizes.dropDuplicates(["doc"])
+            sizes_loaded.select("doc", "n")
+            .dropDuplicates(["doc"])
             .join(batch_ids, "doc", "left_anti")
         )
-    else:
-        # SINGLE-TABLE state (r11 layout, and pre-r11 (doc, sh) dirs).
-        # Loaded state is sanitized for at-least-once replay BEFORE it can
-        # touch the intersection counts, which are plain row counts here
-        # (unlike the MinHash twin, whose verify recomputes Jaccard from
-        # bodies per-row and merely dedups candidate pairs):
-        # - dropDuplicates: a crashed append may have persisted duplicate
-        #   (doc, sh) rows;
-        # - anti-join on batch ids: a REPLAYED batch's docs may already be
-        #   in the state wholesale — keeping both copies would double those
-        #   docs' shingles in all_sh, doubling sizes AND intersections and
-        #   shifting every affected Jaccard (2i/(2na+nb-2i) != i/(na+nb-i)),
-        #   i.e. wrong drops/keeps. Excluding the state copy re-evaluates
-        #   the doc as a batch doc; the batch-ids side is tiny → broadcast.
-        # sanitize BEFORE any size derivation: a crashed append may have
-        # duplicated (doc, sh) rows, and sizes counted off the raw rows
-        # would inflate n for exactly those docs (wrong Jaccards)
-        corpus_shingles = corpus_shingles.dropDuplicates(["doc", "sh"])
-        if "n" not in corpus_shingles.columns:
-            # legacy (doc, sh) state: attach the per-doc set size once
-            # (the pre-r11 per-batch sizes aggregation, now paid only
-            # when reading an old-layout state)
-            legacy_sizes = corpus_shingles.groupBy("doc").agg(
-                F.count(F.lit(1)).alias("n")
-            )
-            corpus_shingles = corpus_shingles.join(legacy_sizes, "doc")
-        else:
-            # MIXED dir: (doc, sh, n) deltas appended into a pre-r11
-            # (doc, sh) directory load as 3-col with n NULL on the
-            # legacy files' rows (plain schema inference) — re-derive
-            # those docs' sizes. A doc caught mid-upgrade can hold rows
-            # in BOTH layouts (a batch replayed across the layout
-            # change), and dropDuplicates keeps an arbitrary null/
-            # non-null mix per (doc, sh) — so for any doc with at least
-            # one null-n row, n is recounted over ALL of that doc's
-            # deduped rows, not just the null subset (counting only the
-            # nulls understated n and overstated Jaccard). Parquet
-            # null-count stats prune the isNull scan to ~zero when the
-            # state is homogeneous, the common case.
-            null_docs = (
-                corpus_shingles.filter(F.col("n").isNull())
-                .select("doc")
-                .distinct()
-            )
-            if not null_docs.isEmpty():
-                affected = corpus_shingles.join(
-                    F.broadcast(null_docs), "doc", "left_semi"
-                )
-                resized = affected.drop("n").join(
-                    affected.groupBy("doc").agg(
-                        F.count(F.lit(1)).alias("n")
-                    ),
-                    "doc",
-                )
-                corpus_shingles = (
-                    corpus_shingles.join(
-                        F.broadcast(null_docs), "doc", "left_anti"
-                    ).unionByName(resized)
-                )
-        corpus_shingles = corpus_shingles.join(batch_ids, "doc", "left_anti")
     # pinned: consumed by the join's right side, the union'd left side,
-    # and the survivors' state delta. Rows carry the per-doc distinct
-    # shingle-set size ``n`` (immutable per doc, computed map-side at
+    # the batch sizes and the survivors' state delta. Rows carry the
+    # per-doc distinct shingle-set size ``n`` (computed map-side at
     # shingling time — never a per-batch O(state) aggregation).
     batch_sh = (
         _shingle_rows_with_size(_spread_input(batch), id_col, text_col, k)
         .localCheckpoint(eager=True)
     )
-    if sizes_state is not None:
-        # narrow fan-out: (doc_a, doc_b) only through the giant join
-        # frame, one count buffer in the aggregation; na/nb attach on
-        # the aggregated pair set. batch sizes are batch-bounded
-        # (broadcast); corpus sizes never shuffle — the pair set is the
-        # (small) build side against their scan.
-        all_sh = corpus_shingles.unionByName(batch_sh.select("doc", "sh"))
-        left = all_sh.select(F.col("doc").alias("doc_a"), "sh")
-        right = batch_sh.select(
-            F.col("doc").alias("doc_b"), F.col("sh").alias("__shb")
+    all_sh = corpus_sh.unionByName(batch_sh.select("doc", "sh"))
+    left = all_sh.select(F.col("doc").alias("doc_a"), "sh")
+    right = batch_sh.select(
+        F.col("doc").alias("doc_b"), F.col("sh").alias("__shb")
+    )
+    pair_counts = (
+        left.join(
+            right,
+            (left["sh"] == right["__shb"]) & (left["doc_a"] < right["doc_b"]),
         )
-        pair_counts = (
-            left.join(
-                right,
-                (left["sh"] == right["__shb"])
-                & (left["doc_a"] < right["doc_b"]),
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("__ni"))
-        )
-        # batch sizes from the PINNED batch_sh (one row per doc via a
-        # tiny dedup): the map-only size(shingles()) alternative was
-        # tried and costs a full re-shingling pass of the batch per
-        # consumer (the expression recomputes; nothing is pinned),
-        # where this is a scan of already-materialized blocks.
-        batch_sizes = batch_sh.select("doc", "n").dropDuplicates(["doc"])
-        sizes_a = sizes_state.unionByName(batch_sizes).select(
-            F.col("doc").alias("doc_a"), F.col("n").alias("__na")
-        )
-        sizes_b = batch_sizes.select(
-            F.col("doc").alias("doc_b"), F.col("n").alias("__nb")
-        )
-        # nb attaches via a broadcast of the truly batch-bounded sizes_b;
-        # the na join is left to the planner — the PAIR set is candidate-
-        # bounded, not batch-bounded (a shared-vocabulary corpus emits
-        # millions of candidate pairs per batch at sf1), and force-
-        # broadcasting it measured 140 s vs 44 s at sf1. Locally AQE
-        # broadcasts the doc-count-sized sizes_a side at runtime; at
-        # state scales past the broadcast cap both sides shuffle slim
-        # (id, int) rows.
-        scored = pair_counts.join(F.broadcast(sizes_b), "doc_b").join(
-            sizes_a, "doc_a"
-        )
-    else:
-        all_sh = corpus_shingles.unionByName(batch_sh)
-        left = all_sh.select(
-            F.col("doc").alias("doc_a"), "sh", F.col("n").alias("__na")
-        )
-        right = batch_sh.select(
-            F.col("doc").alias("doc_b"),
-            F.col("sh").alias("__shb"),
-            F.col("n").alias("__nb"),
-        )
-        scored = (
-            left.join(
-                right,
-                (left["sh"] == right["__shb"])
-                & (left["doc_a"] < right["doc_b"]),
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(
-                F.count(F.lit(1)).alias("__ni"),
-                F.min("__na").alias("__na"),
-                F.min("__nb").alias("__nb"),
-            )
-        )
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("__ni"))
+    )
+    # batch sizes from the PINNED batch_sh (one row per doc via a tiny
+    # dedup): the map-only size(shingles()) alternative was tried and
+    # costs a full re-shingling pass of the batch per consumer (the
+    # expression recomputes; nothing is pinned), where this is a scan of
+    # already-materialized blocks.
+    batch_sizes = batch_sh.select("doc", "n").dropDuplicates(["doc"])
+    sizes_a = sizes_state.unionByName(batch_sizes).select(
+        F.col("doc").alias("doc_a"), F.col("n").alias("__na")
+    )
+    sizes_b = batch_sizes.select(
+        F.col("doc").alias("doc_b"), F.col("n").alias("__nb")
+    )
+    # nb attaches via a broadcast of the truly batch-bounded sizes_b; the
+    # na join is left to the planner — the PAIR set is candidate-bounded,
+    # not batch-bounded (a shared-vocabulary corpus emits millions of
+    # candidate pairs per batch at sf1), and force-broadcasting it
+    # measured 140 s vs 44 s at sf1. Locally AQE broadcasts the
+    # doc-count-sized sizes_a side at runtime; at state scales past the
+    # broadcast cap both sides shuffle slim (id, int) rows.
+    scored = pair_counts.join(F.broadcast(sizes_b), "doc_b").join(
+        sizes_a, "doc_a"
+    )
     losers = (
         scored.filter(
             F.col("__ni") / (F.col("__na") + F.col("__nb") - F.col("__ni"))
@@ -1450,19 +1344,22 @@ def exact_neardup_dedup_incremental(
         .localCheckpoint(eager=True)
     )
     kept = batch.join(losers, batch[id_col] == losers["__loser"], "left_anti")
-    kept_sh = batch_sh.join(
-        kept.select(F.col(id_col).alias("doc")), "doc", "left_semi"
+    # the delta is the batch rows minus the losers', taken against the
+    # pinned losers directly: a semi-join on ``kept`` would re-run its
+    # batch scan and anti-join once per state table
+    new_sh = batch_sh.select("doc", "sh").join(
+        losers, F.col("doc") == losers["__loser"], "left_anti"
     )
-    if new_shingles_only:
-        if computed is not None:
-            return kept, computed.unionByName(kept_sh)
-        return kept, kept_sh
-    if sizes_state is not None:
-        # the full-state return re-attaches n to the narrow state rows
-        # so the returned frame keeps the documented (doc, sh, n) shape
-        # regardless of which layout was loaded
-        corpus_shingles = corpus_shingles.join(sizes_state, "doc")
-    return kept, corpus_shingles.unionByName(kept_sh)
+    new_sizes = batch_sizes.join(
+        losers, F.col("doc") == losers["__loser"], "left_anti"
+    )
+    if state is None:
+        return (
+            kept,
+            corpus_sh.unionByName(new_sh),
+            sizes_state.unionByName(new_sizes),
+        )
+    return kept, new_sh, new_sizes
 
 
 def repeated_substring_spans(
@@ -1717,7 +1614,6 @@ def exact_dedup_incremental(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    new_fps_only: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental exact dedup: dedup a NEW batch against the accumulated
     corpus without touching corpus bodies — the shape every continuously-fed
@@ -1725,14 +1621,12 @@ def exact_dedup_incremental(
     reference's changed-row suppression, cache.js:69-85: state is a
     fingerprint table, not the data).
 
-    With ``new_fps_only=True`` the second return value is ONLY the new
-    fingerprints (not old ∪ new) — pair with state.append_state so
-    per-batch persistence is O(batch), not an O(corpus) state rewrite.
-
     ``seen_fps``: one-column ``fp`` DataFrame of every fingerprint already
-    kept (or None on the first batch). Returns ``(kept, next_seen_fps)``:
-    batch rows that are (a) their fingerprint's min-id winner within the
-    batch and (b) unseen in state; next state = old ∪ kept fingerprints.
+    kept (or None on the first batch). Returns ``(kept, new_fps)``: batch
+    rows that are (a) their fingerprint's min-id winner within the batch
+    and (b) unseen in state, and the kept rows' fingerprints — the state
+    DELTA (next state = old ∪ new). Pair it with state.append_state so
+    per-batch persistence is O(batch), not an O(corpus) state rewrite.
 
     Scale: the batch shuffles as (fp, id) pairs only; the anti-join against
     state is fp-keyed — bucket the state table by fp (sinks.write_bucketed)
@@ -1748,10 +1642,4 @@ def exact_dedup_incremental(
     kept = batch.join(
         winners.select("__id"), batch[id_col] == winners["__id"], "left_semi"
     )
-    new_fps = winners.select("fp")
-    if new_fps_only:
-        return kept, new_fps
-    next_seen = (
-        new_fps if seen_fps is None else seen_fps.unionByName(new_fps)
-    )
-    return kept, next_seen
+    return kept, winners.select("fp")

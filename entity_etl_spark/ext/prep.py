@@ -189,7 +189,7 @@ def run_streaming_prep(
         )
         seen = load_state(spark, state_dir, "doc_fps")
         kept, new_fps = exact_dedup_incremental(
-            seen, gated, id_col=id_col, text_col=text_col, new_fps_only=True
+            seen, gated, id_col=id_col, text_col=text_col
         )
         out = grouped_split(kept, group_col)
         out.write.mode("append").partitionBy("split").parquet(out_dir)
@@ -212,7 +212,6 @@ def run_streaming_neardup_prep(
     min_tokens: int = 20,
     min_quality: float = 0.15,
     verify_threshold: float = 0.5,
-    method: str = "exact",
     timeout_sec: float = 120.0,
 ) -> None:
     """Continuous ingest with NEAR-dup suppression: like
@@ -225,38 +224,46 @@ def run_streaming_neardup_prep(
     two-layer idempotence as run_streaming_prep (source offsets +
     content state).
 
-    ``method='exact'`` (default): state = the corpus shingle inverted
-    index (:func:`...dedup.exact_neardup_dedup_incremental`) — the drop
-    decision uses the exact pair set at any scale, and the corpus
-    contributes only a columnar (doc, sh) state scan per batch (document
-    bodies are never re-read). ``method='minhash'``: state = MinHash
-    signatures (:func:`...dedup.minhash_dedup_incremental` — signatures
-    map-side, LSH band join, bodies fetched candidate-only from the
-    written output) — smaller state and cheaper joins at a measured
-    recall trade near the threshold. Both grow state by exactly the
-    survivors' rows (append, never rewrite)."""
-    from ..state import append_state, load_state
+    State = the corpus shingle inverted index
+    (:func:`...dedup.exact_neardup_dedup_incremental`) in two tables
+    under ``state_dir``: ``doc_shingles`` ``(doc, sh)`` and ``doc_sizes``
+    ``(doc, n)``. The drop decision uses the exact pair set at any scale,
+    the corpus contributes only a columnar state scan per batch (document
+    bodies are never re-read), and each batch appends exactly the
+    survivors' rows (append, never rewrite). A ``state_dir`` written by
+    an older layout (``doc_shingles`` without ``doc_sizes``) raises
+    ``ValueError``: convert it once with
+    ``python tools/migrate_neardup_state.py STATE_DIR``."""
+    import os
+
+    from ..state import append_state, load_state, state_path
     from ..streaming import (
         planned_batch_rows,
         run_available_now,
         spread_batch,
     )
-    from .dedup import exact_neardup_dedup_incremental, minhash_dedup_incremental
+    from .dedup import exact_neardup_dedup_incremental
 
-    if method not in ("exact", "minhash"):
-        raise ValueError(f"unknown near-dup method: {method!r}")
+    if os.path.exists(
+        state_path(state_dir, "doc_shingles")
+    ) and not os.path.exists(state_path(state_dir, "doc_sizes")):
+        raise ValueError(
+            f"near-dup state in {state_dir!r} has doc_shingles but no "
+            "doc_sizes (a pre-two-table layout); convert it once with "
+            f"`python tools/migrate_neardup_state.py {state_dir}`"
+        )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         rows = planned_batch_rows(checkpoint_dir, batch_id)
         if rows == 0 or (rows is None and batch_df.isEmpty()):
             return
         # one landed file = one input partition; fan out before the
-        # per-doc heavy work (clean/quality/signature fold) — width
-        # scaled to the batch's size
+        # per-doc heavy work (clean/quality/shingle fold) — width scaled
+        # to the batch's size
         batch_df = spread_batch(spark, batch_df, rows)
         cleaned = batch_df.withColumn(text_col, clean_text(text_col))
-        # pinned: consumed by the shingle/signature fold, the verify body
-        # union, and the kept anti-join — one clean+quality scan, not three
+        # pinned: consumed by the batch-id exclusion, the shingle fold
+        # and the kept anti-join — one clean+quality scan, not three
         gated = (
             quality_features(cleaned, text_col)
             # barrier BELOW the gate: FilterExec applies no
@@ -271,69 +278,24 @@ def run_streaming_neardup_prep(
                 & (F.col("quality_score") >= min_quality)
             )
         )
-        if method == "exact":
-            state = load_state(spark, state_dir, "doc_shingles")
-            sizes = load_state(spark, state_dir, "doc_sizes")
-            # two-table layout (r12): narrow (doc, sh) shingle rows plus
-            # a tiny (doc, n) sizes table, so the per-batch pair join
-            # stays narrow and its aggregation keeps one count buffer. A
-            # fresh dir starts two-table; a dir that already holds a
-            # single-table state but no sizes table KEEPS the
-            # single-table layout (appending narrow rows would leave
-            # NULL-n rows the sizes table doesn't cover) — migrate old
-            # dirs offline if the narrow layout matters.
-            two_table = state is None or sizes is not None
-            empty = spark.createDataFrame(
-                [], f"{id_col} long, {text_col} string"
-            )
-            kept, new_sh = exact_neardup_dedup_incremental(
-                empty,
-                gated,
-                id_col=id_col,
-                text_col=text_col,
-                corpus_shingles=state,
-                corpus_sizes=sizes if state is not None else None,
-                threshold=verify_threshold,
-                new_shingles_only=True,
-            )
-            out = grouped_split(kept, group_col)
-            out.write.mode("append").partitionBy("split").parquet(out_dir)
-            # append exactly the survivors' rows: O(batch) state growth
-            if two_table:
-                append_state(
-                    new_sh.select("doc", "sh"), state_dir, "doc_shingles"
-                )
-                # one (doc, n) row per survivor, deduped from the delta
-                # rows (which read pinned shingle blocks — recomputing
-                # sizes from text here would re-shingle the batch)
-                append_state(
-                    new_sh.select("doc", "n").dropDuplicates(["doc"]),
-                    state_dir,
-                    "doc_sizes",
-                )
-            else:
-                append_state(new_sh, state_dir, "doc_shingles")
-            return
-        sigs = load_state(spark, state_dir, "doc_sigs")
-        try:
-            corpus = spark.read.parquet(out_dir).select(id_col, text_col)
-        except Exception:  # first batch: nothing written yet
-            corpus = spark.createDataFrame(
-                [], f"{id_col} long, {text_col} string"
-            )
-        kept, new_sigs = minhash_dedup_incremental(
-            corpus,
+        shingles = load_state(spark, state_dir, "doc_shingles")
+        sizes = load_state(spark, state_dir, "doc_sizes")
+        empty = spark.createDataFrame([], f"{id_col} long, {text_col} string")
+        kept, new_shingles, new_sizes = exact_neardup_dedup_incremental(
+            empty,
             gated,
             id_col=id_col,
             text_col=text_col,
-            corpus_sigs=sigs,
-            verify_threshold=verify_threshold,
-            new_sigs_only=True,
+            state=None if shingles is None else (shingles, sizes),
+            threshold=verify_threshold,
         )
         out = grouped_split(kept, group_col)
         out.write.mode("append").partitionBy("split").parquet(out_dir)
-        # append exactly the survivors' signatures: O(batch) state
-        # growth, never an O(corpus) rewrite of the signature table
-        append_state(new_sigs, state_dir, "doc_sigs")
+        # sizes BEFORE shingles: a crash between the two appends then
+        # leaves orphan size rows, which the replay's load sanitation
+        # drops and no pair ever references; the reverse order would
+        # leave shingles without sizes
+        append_state(new_sizes, state_dir, "doc_sizes")
+        append_state(new_shingles, state_dir, "doc_shingles")
 
     run_available_now(stream, checkpoint_dir, process, timeout_sec=timeout_sec)

@@ -322,11 +322,15 @@ def planned_batch_rows(checkpoint_dir: str, batch_id: int) -> int | None:
     lines of the files planned into that batch) BEFORE the batch runs,
     so during ``foreachBatch`` the entry is authoritative; every
     ``compactInterval``-th batch the entry is ``<batch_id>.compact``
-    carrying all prior entries tagged with their batchId. A batch with
-    neither entry planned no new files (a timer-only / zero-input
-    batch): 0 rows. Returns None — callers fall back to ``isEmpty()`` —
-    when the checkpoint is not a local single-file-source layout or a
-    listed file is not locally readable parquet."""
+    carrying all prior entries tagged with their batchId. Returns None —
+    callers fall back to ``isEmpty()`` — when the checkpoint is not a
+    local single-file-source layout, a listed file is not locally
+    readable parquet, or the batch has neither entry: a missing entry
+    does not prove an empty batch, because a non-file source (Kafka
+    writes its initial offsets to ``sources/0/0``) passes the layout
+    check, and a file source's log ids advance only on batches that plan
+    files, so they fall behind the query's batch ids after any no-data
+    micro-batch."""
     import json as _json
     import os
     from urllib.parse import unquote, urlparse
@@ -346,7 +350,7 @@ def planned_batch_rows(checkpoint_dir: str, batch_id: int) -> int | None:
     elif os.path.exists(compact):
         path, only_batch = compact, int(batch_id)
     else:
-        return 0  # no entry = the batch planned no new files
+        return None
     total = 0
     try:
         import pyarrow.parquet as _pq
@@ -369,32 +373,6 @@ def planned_batch_rows(checkpoint_dir: str, batch_id: int) -> int | None:
     except Exception:
         return None
     return total
-
-
-def source_batch_is_empty(
-    batch_df: DataFrame,
-    checkpoint_dir: str | None = None,
-    batch_id: int | None = None,
-) -> bool:
-    """Empty-batch probe for per-batch frames of SOURCE-SHAPED streams —
-    the ``isEmpty()`` pre-check folded into a driver-side read of the
-    file-source checkpoint log (guide §1: the take(1) job cost ~0.1 s per
-    micro-batch across every slot/prep stream, pure overhead on the
-    non-empty common case).
-
-    Exact when frame emptiness equals source emptiness: the frame is the
-    source, or row-preserving transforms of it (0 planned rows => empty
-    under ANY per-row transform). A caller that pre-filters its stream
-    may see a planned-rows>0 batch that is empty after the filter; every
-    slot family tolerates that (an empty partial merges as identity and
-    a sequential fold of nothing re-writes the prior state), it just
-    pays one redundant slot write. Falls back to ``isEmpty()`` whenever
-    the planned rows are unknowable."""
-    if checkpoint_dir is not None and batch_id is not None:
-        n = planned_batch_rows(checkpoint_dir, batch_id)
-        if n is not None:
-            return n == 0
-    return batch_df.isEmpty()
 
 
 # Rows per partition when spreading a landed micro-batch: small enough

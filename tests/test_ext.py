@@ -469,34 +469,44 @@ def test_exact_neardup_incremental_policy_and_state(spark):
         ],
         ["doc_id", "text"],
     )
-    kept, state = exact_neardup_dedup_incremental(corpus, batch)
+    kept, shingles, sizes = exact_neardup_dedup_incremental(corpus, batch)
     assert sorted(r["doc_id"] for r in kept.collect()) == [11]
-    # state = corpus shingles + survivors' shingles only
-    state_docs = sorted(
-        r["doc"] for r in state.select("doc").distinct().collect()
-    )
-    assert state_docs == [1, 11]
+    # first-run delta = corpus rows + survivors' rows only, one size row
+    # per doc equal to its shingle count
+    per_doc = {
+        r["doc"]: r["count"] for r in shingles.groupBy("doc").count().collect()
+    }
+    assert sorted(per_doc) == [1, 11]
+    assert {r["doc"]: r["n"] for r in sizes.collect()} == per_doc
 
-    # increment 2 against the PERSISTED state, duplicated rows simulating
-    # an at-least-once replayed append — dedup on load must keep counts
-    # exact (duplicated shingles would corrupt the intersection math)
-    state2 = state.unionByName(state)  # worst-case full duplication
+    # increment 2 against the PERSISTED state with worst-case full
+    # duplication of BOTH tables (an at-least-once replayed append) and a
+    # re-sent batch doc (11) already in the state: the load sanitation
+    # must keep the intersection counts exact, and 11 is re-evaluated as
+    # a batch doc (it beats its near-dup 20, and nothing in the state
+    # drops it)
+    state2 = (shingles.unionByName(shingles), sizes.unionByName(sizes))
     batch2 = spark.createDataFrame(
         [
-            # near-dup of KEPT doc 11 -> dropped via state, not bodies
+            (11, "completely different content about spark query engines ok"),
+            # near-dup of 11 -> dropped
             (20, "completely different content about spark query engines yes"),
             (21, "a wholly novel sentence with nothing shared at all here"),
         ],
         ["doc_id", "text"],
     )
     empty = spark.createDataFrame([], "doc_id long, text string")
-    kept2, state3 = exact_neardup_dedup_incremental(
-        empty, batch2, corpus_shingles=state2, new_shingles_only=True
+    kept2, shingles2, sizes2 = exact_neardup_dedup_incremental(
+        empty, batch2, state=state2
     )
-    assert sorted(r["doc_id"] for r in kept2.collect()) == [21]
-    assert sorted(
-        r["doc"] for r in state3.select("doc").distinct().collect()
-    ) == [21]
+    assert sorted(r["doc_id"] for r in kept2.collect()) == [11, 21]
+    # the delta is the batch survivors only, in both tables
+    per_doc2 = {
+        r["doc"]: r["count"]
+        for r in shingles2.groupBy("doc").count().collect()
+    }
+    assert sorted(per_doc2) == [11, 21]
+    assert {r["doc"]: r["n"] for r in sizes2.collect()} == per_doc2
 
 
 def test_exact_neardup_incremental_matches_batch_policy_on_sf(spark):
@@ -520,8 +530,11 @@ def test_exact_neardup_incremental_matches_batch_policy_on_sf(spark):
         batch = docs.filter(
             (F.col("doc_id") * 3 / n >= b) & (F.col("doc_id") * 3 / n < b + 1)
         ).select("doc_id", "text")
-        kept, state = exact_neardup_dedup_incremental(
-            empty, batch, corpus_shingles=state
+        kept, new_sh, new_sizes = exact_neardup_dedup_incremental(
+            empty, batch, state=state
+        )
+        state = (new_sh, new_sizes) if state is None else (
+            state[0].unionByName(new_sh), state[1].unionByName(new_sizes)
         )
         kept_all += [r["doc_id"] for r in kept.collect()]
     batch_kept = [
@@ -665,74 +678,127 @@ def test_exact_neardup_incremental_replayed_batch_docs_in_state(spark):
     doc5 = (5, "a b c d e f g h")       # shingles: abc bcd cde def efg fgh
     doc6 = (6, "d e f g h p q r")       # shares exactly {def, efg, fgh}
     inc1 = spark.createDataFrame([doc5], ["doc_id", "text"])
-    kept1, state = exact_neardup_dedup_incremental(empty, inc1)
+    kept1, shingles, sizes = exact_neardup_dedup_incremental(empty, inc1)
     assert [r["doc_id"] for r in kept1.collect()] == [5]
 
     inc2 = spark.createDataFrame([doc5, doc6], ["doc_id", "text"])
-    kept2, _ = exact_neardup_dedup_incremental(
-        empty, inc2, corpus_shingles=state
+    kept2, _, _ = exact_neardup_dedup_incremental(
+        empty, inc2, state=(shingles, sizes)
     )
     # doc 6 is NOT a near-dup of doc 5 (J = 0.333 < 0.5): it must be
     # kept, redelivery of doc 5 notwithstanding
     assert sorted(r["doc_id"] for r in kept2.collect()) == [5, 6]
 
 
-def test_exact_neardup_incremental_mixed_schema_state_dir(spark):
-    """A pre-r11 (doc, sh) state dir that later received (doc, sh, n)
-    appends loads as 3-col with n NULL on the legacy rows (plain schema
-    inference picks one footer). The op must re-derive those docs'
-    sizes — a NULL n makes the Jaccard predicate NULL and silently KEEPS
-    every near-dup of a legacy corpus doc (r11 review finding)."""
+def _migrated_state(spark, state_dir, write):
+    """Lay down an old-layout ``doc_shingles`` table with ``write(path)``,
+    run tools/migrate_neardup_state.py on the dir twice, and return the
+    two-table state; the second run must change no row."""
+    import os
+    import sys
+
+    from entity_etl_spark.state import load_state, state_path
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from migrate_neardup_state import migrate
+
+    write(state_path(state_dir, "doc_shingles"))
+
+    def rows():
+        return tuple(
+            sorted(tuple(r) for r in load_state(spark, state_dir, t).collect())
+            for t in ("doc_shingles", "doc_sizes")
+        )
+
+    migrate(spark, state_dir)
+    once = rows()
+    migrate(spark, state_dir)
+    assert rows() == once
+    sizes = load_state(spark, state_dir, "doc_sizes")
+    assert dict(sizes.dtypes)["n"] == "int"
+    return load_state(spark, state_dir, "doc_shingles"), sizes
+
+
+def _assert_fresh_state(spark, state, corpus):
+    """The migrated two-table rows equal a fresh state of the same docs."""
+    from entity_etl_spark.ext.dedup import exact_neardup_dedup_incremental
+
+    empty = corpus.limit(0)
+    _, fresh_sh, fresh_sizes = exact_neardup_dedup_incremental(corpus, empty)
+    for got, want in zip(state, (fresh_sh, fresh_sizes)):
+        assert sorted(tuple(r) for r in got.collect()) == sorted(
+            tuple(r) for r in want.collect()
+        )
+
+
+def test_exact_neardup_incremental_mixed_schema_state_dir(spark, tmp_path):
+    """Every pre-two-table layout migrates to the state a fresh run
+    builds, and the op then keeps the same batch docs: a pre-r11
+    (doc, sh) dir with replay-duplicated rows (sizes must come from the
+    DEDUPED rows — duplicated counts would halve every Jaccard and keep
+    near-dups), an r11 (doc, sh, n) dir, a pre-r11 dir that later
+    received (doc, sh, n) appends (it loads with n NULL on the legacy
+    rows; a NULL n made the Jaccard predicate NULL and silently kept
+    every near-dup of a legacy corpus doc, r11 review finding), and a
+    two-table dir, which comes out unchanged."""
+    import os
+
     from entity_etl_spark.ext.dedup import (
         _shingle_rows_with_size,
         exact_neardup_dedup_incremental,
     )
+    from entity_etl_spark.state import state_path
 
     corpus = spark.createDataFrame(
         [
             (1, "the quick brown fox jumps over the lazy dog near the bank"),
             (2, "completely different content about spark query engines ok"),
         ],
-        ["doc_id", "text"],
+        "doc_id long, text string",
     )
-    state = _shingle_rows_with_size(corpus, "doc_id", "text", 3)
-    # doc 1 = legacy rows (n NULL, as a mixed-dir load yields); doc 2 =
-    # post-upgrade rows (n present)
-    mixed = state.withColumn(
-        "n", F.when(F.col("doc") == 1, F.lit(None)).otherwise(F.col("n"))
-    )
+    rows = _shingle_rows_with_size(corpus, "doc_id", "text", 3)
+    legacy = rows.drop("n")
+
+    def mixed(path):
+        legacy.filter(F.col("doc") == 1).write.parquet(path)
+        rows.filter(F.col("doc") == 2).write.mode("append").parquet(path)
+
+    def two_table(path):
+        legacy.write.parquet(path)
+        rows.select("doc", "n").dropDuplicates(["doc"]).write.parquet(
+            state_path(os.path.dirname(path), "doc_sizes")
+        )
+
+    layouts = {
+        "legacy": lambda path: legacy.unionByName(legacy).write.parquet(path),
+        "single_table": lambda path: rows.write.parquet(path),
+        "mixed": mixed,
+        "two_table": two_table,
+    }
     batch = spark.createDataFrame(
         [
-            # near-dup of LEGACY doc 1 -> must drop (NULL-n bug kept it)
+            # near-dup of doc 1 (the LEGACY rows in the mixed dir) -> drop
             (10, "the quick brown fox jumps over the lazy dog near the bend"),
-            # near-dup of upgraded doc 2 -> drops either way
+            # near-dup of doc 2 -> drop
             (11, "completely different content about spark query engines no"),
             (12, "a wholly novel sentence with nothing shared at all here"),
         ],
-        ["doc_id", "text"],
+        "doc_id long, text string",
     )
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    kept, _ = exact_neardup_dedup_incremental(
-        empty, batch, corpus_shingles=mixed, new_shingles_only=True
-    )
-    assert sorted(r["doc_id"] for r in kept.collect()) == [12]
-
-    # legacy (no n column at all) + replay-duplicated rows: sizes must
-    # come from the DEDUPED rows (duplicated counts would halve every
-    # Jaccard and wrongly keep near-dups)
-    legacy = state.drop("n")
-    dup = legacy.unionByName(legacy)
-    kept2, _ = exact_neardup_dedup_incremental(
-        empty, batch, corpus_shingles=dup, new_shingles_only=True
-    )
-    assert sorted(r["doc_id"] for r in kept2.collect()) == [12]
+    for name, write in layouts.items():
+        state = _migrated_state(spark, str(tmp_path / name), write)
+        _assert_fresh_state(spark, state, corpus)
+        kept, _, _ = exact_neardup_dedup_incremental(
+            corpus.limit(0), batch, state=state
+        )
+        assert sorted(r["doc_id"] for r in kept.collect()) == [12], name
 
 
 def test_exact_neardup_incremental_two_table_state(spark):
-    """r12 two-table state: narrow (doc, sh) + (doc, n) sizes must give
-    the same kept set and delta as the single-table (doc, sh, n) layout,
-    including under replay-duplicated rows in EITHER table and a
-    replayed batch whose docs already sit in both tables."""
+    """The two-table state, narrow (doc, sh) + (doc, n) sizes, gives the
+    same kept set and delta as the clean state under replay-duplicated
+    rows in EITHER table and a replayed batch whose docs already sit in
+    both tables."""
     from entity_etl_spark.ext.dedup import exact_neardup_dedup_incremental
 
     empty = spark.createDataFrame([], "doc_id long, text string")
@@ -743,9 +809,10 @@ def test_exact_neardup_incremental_two_table_state(spark):
         ],
         ["doc_id", "text"],
     )
-    _, state = exact_neardup_dedup_incremental(empty, corpus)
+    _, shingles, sizes = exact_neardup_dedup_incremental(empty, corpus)
     batch = spark.createDataFrame(
         [
+            # replayed: doc 2 already sits in both state tables
             (2, "completely different content about spark query engines ok"),
             (10, "the quick brown fox jumps over the lazy dog near the bend"),
             (11, "completely different content about spark query engines no"),
@@ -753,70 +820,60 @@ def test_exact_neardup_incremental_two_table_state(spark):
         ],
         ["doc_id", "text"],
     )
-    kept_single, delta_single = exact_neardup_dedup_incremental(
-        empty, batch, corpus_shingles=state, new_shingles_only=True
-    )
-    # two-table: same state split into narrow shingles + sizes, each
-    # with worst-case full replay duplication
-    narrow = state.select("doc", "sh")
-    sizes = state.select("doc", "n").dropDuplicates(["doc"])
-    kept_two, delta_two = exact_neardup_dedup_incremental(
-        empty,
-        batch,
-        corpus_shingles=narrow.unionByName(narrow),
-        corpus_sizes=sizes.unionByName(sizes),
-        new_shingles_only=True,
-    )
-    assert sorted(r["doc_id"] for r in kept_two.collect()) == sorted(
-        r["doc_id"] for r in kept_single.collect()
-    )
-    assert sorted(
-        (r["doc"], r["sh"], r["n"]) for r in delta_two.collect()
-    ) == sorted((r["doc"], r["sh"], r["n"]) for r in delta_single.collect())
-    # full-state return keeps the (doc, sh, n) shape in two-table mode
-    _, full = exact_neardup_dedup_incremental(
-        empty, batch, corpus_shingles=narrow, corpus_sizes=sizes
-    )
-    assert set(full.columns) == {"doc", "sh", "n"}
+
+    def run(state):
+        kept, new_sh, new_sizes = exact_neardup_dedup_incremental(
+            empty, batch, state=state
+        )
+        return (
+            sorted(r["doc_id"] for r in kept.collect()),
+            sorted(tuple(r) for r in new_sh.collect()),
+            sorted(tuple(r) for r in new_sizes.collect()),
+        )
+
+    clean = run((shingles, sizes))
+    # doc 2 is re-evaluated as a batch doc: it beats its near-dup 11, and
+    # 10 drops against corpus doc 1
+    assert clean[0] == [2, 12]
+    assert sorted({doc for doc, _ in clean[1]}) == [2, 12]
+    assert [doc for doc, _ in clean[2]] == [2, 12]
+    for state in (
+        (shingles.unionByName(shingles), sizes),
+        (shingles, sizes.unionByName(sizes)),
+        (shingles.unionByName(shingles), sizes.unionByName(sizes)),
+    ):
+        assert run(state) == clean
 
 
-def test_exact_neardup_incremental_heterogeneous_mixed_doc(spark):
-    """A doc with state rows in BOTH layouts (a batch replayed across
-    the layout upgrade): after dedup its rows are an arbitrary
-    null/non-null n mix. Counting only the null subset understates n and
-    OVERSTATES Jaccard (the r11 repair's blind spot, r11 ADVICE) — the
-    repair must recount over ALL of the doc's deduped rows."""
-    from pyspark.sql import functions as F
-
+def test_exact_neardup_incremental_heterogeneous_mixed_doc(spark, tmp_path):
+    """A doc with state rows in BOTH old layouts (a batch replayed across
+    the layout upgrade): exactly its 3 SHARED shingles sit in (doc, sh)
+    files and all 6 in (doc, sh, n) files, so the loaded rows are a
+    null/non-null n mix. Counting only the null subset would read n=3 and
+    make doc 6's J = 3/(3 + 6 - 3) = 0.5 >= 0.5, the wrong drop (its true
+    J is 3/9; the r11 repair's blind spot, r11 ADVICE). The migration
+    recounts n over ALL of the doc's deduped rows."""
     from entity_etl_spark.ext.dedup import (
         _shingle_rows_with_size,
         exact_neardup_dedup_incremental,
     )
 
     corpus = spark.createDataFrame(
-        [(5, "a b c d e f g h")], ["doc_id", "text"]  # 6 distinct shingles
+        [(5, "a b c d e f g h")], "doc_id long, text string"  # 6 shingles
     )
     rows = _shingle_rows_with_size(corpus, "doc_id", "text", 3)
-    # exactly the 3 SHARED shingles carry NULL n (the pre-upgrade rows
-    # the (doc, sh) dedup kept), the other 3 carry n=6: the null-subset
-    # recount then reads n=3, and every pair row that matters carries
-    # the undercounted value — J = 3/(3 + 6 - 3) = 0.5 >= 0.5, the
-    # wrong drop (doc 6's true J is 3/9). Pinned deterministic so the
-    # broken repair ALWAYS fails, not only when a hash cooperates.
     shared = ("d e f", "e f g", "f g h")
-    mixed = rows.withColumn(
-        "n",
-        F.when(
-            F.col("sh").isin(*shared),
-            F.lit(None).cast(rows.schema["n"].dataType),
-        ).otherwise(F.col("n")),
-    )
-    assert mixed.filter(F.col("n").isNull()).count() == 3
+
+    def write(path):
+        rows.filter(F.col("sh").isin(*shared)).drop("n").write.parquet(path)
+        rows.write.mode("append").parquet(path)
+
+    state = _migrated_state(spark, str(tmp_path / "state"), write)
+    _assert_fresh_state(spark, state, corpus)
     batch = spark.createDataFrame(
-        [(6, "d e f g h p q r")], ["doc_id", "text"]
+        [(6, "d e f g h p q r")], "doc_id long, text string"
     )
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    kept, _ = exact_neardup_dedup_incremental(
-        empty, batch, corpus_shingles=mixed, new_shingles_only=True
+    kept, _, _ = exact_neardup_dedup_incremental(
+        corpus.limit(0), batch, state=state
     )
     assert sorted(r["doc_id"] for r in kept.collect()) == [6]

@@ -317,8 +317,9 @@ def test_exact_dedup_incremental_suppresses_seen_and_batch_dups(spark):
         [(10, "alpha"), (11, "gamma"), (12, "gamma"), (13, "beta")],
         "doc_id long, text string",
     )
-    kept2, state2 = exact_dedup_incremental(state1, b2)
+    kept2, new2 = exact_dedup_incremental(state1, b2)
     assert {r.doc_id for r in kept2.collect()} == {11}
+    state2 = state1.unionByName(new2)  # the call returns the delta
     assert state2.count() == 3  # alpha, beta, gamma
     kept3, _ = exact_dedup_incremental(state2, b2)
     assert kept3.count() == 0  # replayed batch fully suppressed
@@ -651,8 +652,8 @@ def test_bpe_learn_merges_greedy_left_to_right(spark):
 
 def test_minhash_dedup_incremental_state_grows_by_survivors(spark):
     """Two increments: batch 2 replays batch 1's surviving content (near
-    dup) -> dropped via the SIGNATURE state alone; state grows by exactly
-    the survivors."""
+    dup) -> dropped via the SIGNATURE state alone; the returned delta is
+    exactly the survivors."""
     from entity_etl_spark.ext.dedup import minhash_dedup_incremental
 
     base = "the quick brown fox jumps over the lazy dog again and again "
@@ -680,7 +681,8 @@ def test_minhash_dedup_incremental_state_grows_by_survivors(spark):
         corpus.unionByName(b1), b2, corpus_sigs=sigs1
     )
     assert [r.doc_id for r in kept2.collect()] == [21]
-    assert sigs2.count() == 3
+    assert [r.doc for r in sigs2.collect()] == [21]
+    assert sigs1.unionByName(sigs2).count() == 3
 
 
 def test_cdc_spans_find_misaligned_repeats(spark):

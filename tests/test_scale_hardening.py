@@ -281,13 +281,14 @@ def test_append_state_grows_without_rewrite(spark, tmp_path):
     assert load_state(spark, d, "sigs").count() == 3
 
 
-def test_incremental_dedup_new_only_matches_full_state(spark):
-    """new_sigs_only / new_fps_only return exactly the delta the full
-    union form would have added — append-mode state equals rewrite-mode
-    state for both incremental dedup helpers."""
+def test_incremental_dedup_returns_state_delta(spark):
+    """Both incremental dedup helpers return the state DELTA, the rows a
+    caller appends with state.append_state: the next state is old ∪
+    delta."""
     from entity_etl_spark.ext.dedup import (
         exact_dedup_incremental,
         minhash_dedup_incremental,
+        minhash_signatures,
     )
 
     corpus = spark.createDataFrame(
@@ -301,39 +302,26 @@ def test_incremental_dedup_new_only_matches_full_state(spark):
         ],
         "doc_id bigint, text string",
     )
-    kept_a, full = minhash_dedup_incremental(corpus, batch, k=3)
-    kept_b, delta = minhash_dedup_incremental(
-        corpus, batch, k=3, new_sigs_only=True
-    )
-    assert {r.doc_id for r in kept_a.collect()} == {
-        r.doc_id for r in kept_b.collect()
-    } == {11}
-    corpus_docs = {1}
+    kept, delta = minhash_dedup_incremental(corpus, batch, k=3)
+    assert {r.doc_id for r in kept.collect()} == {11}
     # corpus_sigs computed IN-CALL from a non-empty corpus: the delta
     # must carry those corpus signatures too (they are persisted nowhere
     # else — an append_state caller would otherwise go blind to the
-    # original corpus), so delta == full here
-    assert {r.doc for r in delta.collect()} == corpus_docs | {11}
-    assert {r.doc for r in full.collect()} == corpus_docs | {11}
+    # original corpus)
+    assert {r.doc for r in delta.collect()} == {1, 11}
 
     # with PRE-PERSISTED corpus_sigs (every increment after the first)
     # the delta is exactly the batch survivors
-    from entity_etl_spark.ext.dedup import minhash_signatures
-
     pre_sigs = minhash_signatures(corpus, "doc_id", "text", k=3)
     _, delta2 = minhash_dedup_incremental(
-        corpus, batch, k=3, corpus_sigs=pre_sigs, new_sigs_only=True
+        corpus, batch, k=3, corpus_sigs=pre_sigs
     )
     assert {r.doc for r in delta2.collect()} == {11}
 
     seen = spark.createDataFrame([("fp1",)], "fp string")
-    kept_c, new_fps = exact_dedup_incremental(
-        seen, batch, new_fps_only=True
-    )
-    kept_d, next_seen = exact_dedup_incremental(seen, batch)
-    got_new = {r.fp for r in new_fps.collect()}
-    assert {r.fp for r in next_seen.collect()} == got_new | {"fp1"}
-    assert len(got_new) == 2  # both batch docs unseen
+    _, new_fps = exact_dedup_incremental(seen, batch)
+    assert new_fps.count() == 2  # both batch docs unseen
+    assert "fp1" not in {r.fp for r in new_fps.collect()}
 
 
 # --------------------------------------------------------------- round 5

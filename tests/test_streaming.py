@@ -2,6 +2,7 @@
 checkpoint (O1/O14), streaming changed-row suppression (O5), stateful TTL
 dedup (O12/O13)."""
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -225,51 +226,156 @@ def test_stream_static_broadcast_enrichment(spark, tmp_path):
     assert got == [(1, 10, "gold"), (2, 20, "silver"), (3, 30, None)]
 
 
+ND_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("source", T.StringType()),
+    ]
+)
+ND_GOOD = ("the quick brown fox jumps over the lazy dog and it "
+           "is a fine day in the park of wonders to see it all ") * 2
+ND_FRESH = ("entirely different content about distributed joins and "
+            "shuffle partitions with a vocabulary all of its own that "
+            "overlaps nothing in the first document at all here ") * 2
+# batch 1: one doc; batch 2: a paraphrased (tail-edited) re-send of it
+# plus a genuinely new doc
+ND_BATCHES = (
+    [(1, ND_GOOD, "sa")],
+    [(10, ND_GOOD + "extra tail words", "sa"), (11, ND_FRESH, "sb")],
+)
+
+
+def write_docs(spark, src, rows, n):
+    spark.createDataFrame(rows, ND_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{src}/f{n}")
+
+
+def neardup_ingest(spark, src, root):
+    from entity_etl_spark.ext.prep import run_streaming_neardup_prep
+
+    run_streaming_neardup_prep(
+        spark, stream_source(spark, f"{src}/f*", ND_SCHEMA),
+        f"{root}/out", f"{root}/state", f"{root}/ckpt",
+    )
+
+
 def test_run_streaming_neardup_prep_drops_paraphrased_resend(spark, tmp_path):
     """Near-dup streaming ingest: batch 2 re-sends batch 1's surviving
     content with a small tail edit — byte-UNidentical, so fingerprint
-    state would admit it; the MinHash signature state drops it. A
-    genuinely new doc still lands."""
-    from entity_etl_spark.ext.prep import run_streaming_neardup_prep
-    from entity_etl_spark.streaming import stream_source
+    state would admit it; the shingle state drops it. A genuinely new
+    doc still lands."""
+    src, root = str(tmp_path / "nd_src"), str(tmp_path / "nd")
 
-    src = str(tmp_path / "nd_src")
-    out = str(tmp_path / "nd_corpus")
-    state = str(tmp_path / "nd_state")
-    ckpt = str(tmp_path / "nd_ckpt")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("source", T.StringType()),
+    write_docs(spark, src, ND_BATCHES[0], 1)
+    neardup_ingest(spark, src, root)
+    got = {r.doc_id for r in spark.read.parquet(f"{root}/out").collect()}
+    assert got == {1}
+
+    write_docs(spark, src, ND_BATCHES[1], 2)
+    neardup_ingest(spark, src, root)
+    got = {r.doc_id for r in spark.read.parquet(f"{root}/out").collect()}
+    assert got == {1, 11}  # 10 suppressed by SHINGLE state, not bytes
+
+
+def test_run_streaming_neardup_prep_replays_crash_between_state_appends(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after batch 2's doc_sizes append and before its
+    doc_shingles append leaves orphan size rows; the replayed batch must
+    give the same kept set and the same (deduped) state as a clean
+    run."""
+    from entity_etl_spark import state as state_mod
+
+    src = str(tmp_path / "src")
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    write_docs(spark, src, ND_BATCHES[0], 1)
+    neardup_ingest(spark, src, clean)
+    neardup_ingest(spark, src, crashed)
+    write_docs(spark, src, ND_BATCHES[1], 2)
+    neardup_ingest(spark, src, clean)
+
+    append_state = state_mod.append_state
+
+    def crash_before_shingles(rows, state_dir, table):
+        if table == "doc_shingles":
+            raise RuntimeError("crash between the state appends")
+        append_state(rows, state_dir, table)
+
+    monkeypatch.setattr(state_mod, "append_state", crash_before_shingles)
+    with pytest.raises(Exception, match="crash between the state appends"):
+        neardup_ingest(spark, src, crashed)
+    monkeypatch.undo()
+    sizes = state_mod.load_state(spark, f"{crashed}/state", "doc_sizes")
+    shingles = state_mod.load_state(spark, f"{crashed}/state", "doc_shingles")
+    assert {r.doc for r in sizes.collect()} == {1, 11}
+    assert {r.doc for r in shingles.collect()} == {1}  # 11's are orphans
+    neardup_ingest(spark, src, crashed)  # replays batch 2
+
+    def kept_and_state(root):
+        out = spark.read.parquet(f"{root}/out")
+        return {r.doc_id for r in out.collect()}, [
+            sorted(
+                tuple(r)
+                for r in state_mod.load_state(spark, f"{root}/state", t)
+                .distinct()
+                .collect()
+            )
+            for t in ("doc_shingles", "doc_sizes")
         ]
-    )
-    good = ("the quick brown fox jumps over the lazy dog and it "
-            "is a fine day in the park of wonders to see it all ") * 2
-    fresh = ("entirely different content about distributed joins and "
-             "shuffle partitions with a vocabulary all of its own that "
-             "overlaps nothing in the first document at all here ") * 2
 
-    def write_docs(rows, n):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/f{n}")
+    assert kept_and_state(crashed) == kept_and_state(clean)
+    assert kept_and_state(clean)[0] == {1, 11}
 
-    def run():
+
+def test_run_streaming_neardup_prep_rejects_unmigrated_state(spark, tmp_path):
+    """A doc_shingles table without doc_sizes (every pre-two-table
+    layout) is refused, naming the migration tool, before any batch
+    runs."""
+    from entity_etl_spark.ext.prep import run_streaming_neardup_prep
+    from entity_etl_spark.state import state_path
+
+    state = str(tmp_path / "state")
+    spark.createDataFrame([(1, "a b c", 1)], "doc long, sh string, n int") \
+        .write.parquet(state_path(state, "doc_shingles"))
+    (tmp_path / "src").mkdir()
+    with pytest.raises(ValueError, match="migrate_neardup_state"):
         run_streaming_neardup_prep(
-            spark, stream_source(spark, f"{src}/f*", schema),
-            out, state, ckpt,
+            spark,
+            stream_source(spark, str(tmp_path / "src"), ND_SCHEMA),
+            str(tmp_path / "out"),
+            state,
+            str(tmp_path / "ckpt"),
         )
 
-    write_docs([(1, good, "sa")], 1)
-    run()
-    assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1}
 
-    # paraphrased re-send (tail edit) + genuinely new doc
-    write_docs([(10, good + "extra tail words", "sa"), (11, fresh, "sb")], 2)
-    run()
-    got = {r.doc_id for r in spark.read.parquet(out).collect()}
-    assert got == {1, 11}  # 10 suppressed by SIGNATURE state, not bytes
+def test_planned_batch_rows_unknown_without_a_log_entry(spark, tmp_path):
+    """A batch with no ``sources/0/<batch_id>`` entry is NOT provably
+    empty: Kafka writes its initial offsets to ``sources/0/0`` and a file
+    source's log ids fall behind the query's batch ids after a no-data
+    batch. The probe must answer None (callers fall back to
+    ``isEmpty()``), not 0 (callers would skip and commit a batch that
+    holds data)."""
+    import json
+    import os
+
+    from entity_etl_spark.streaming import planned_batch_rows
+
+    kafka = tmp_path / "kafka_ckpt" / "sources" / "0"
+    os.makedirs(kafka)
+    (kafka / "0").write_text('v1\n{"events":{"0":0,"1":0}}\n')
+    assert planned_batch_rows(str(tmp_path / "kafka_ckpt"), 1) is None
+
+    data = str(tmp_path / "landed")
+    spark.range(7).coalesce(1).write.parquet(data)
+    part = next(f for f in os.listdir(data) if f.endswith(".parquet"))
+    files = tmp_path / "file_ckpt" / "sources" / "0"
+    os.makedirs(files)
+    entry = {"path": f"file://{data}/{part}", "timestamp": 0, "batchId": 0}
+    (files / "0").write_text("v1\n" + json.dumps(entry) + "\n")
+    assert planned_batch_rows(str(tmp_path / "file_ckpt"), 0) == 7
+    assert planned_batch_rows(str(tmp_path / "file_ckpt"), 1) is None
 
 
 def test_drop_duplicates_within_watermark(spark, tmp_path):
